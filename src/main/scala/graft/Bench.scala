@@ -1,54 +1,31 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Queries are materialized through the noop sink so the full plan
-  * (including projections a count() would prune) is executed.
+  * (including projections a count() would prune) is executed. A query
+  * that throws is listed under "failed" and left out of the total; it
+  * is never timed.
   */
 object Bench {
 
   /** Producer-clear discipline shared by Bench and `tools.Adjudicate`:
     * artifact PRODUCERS measure the production computation on every
-    * repeat (their session memo is cleared), consumers keep the memo
+    * repeat (the artifacts they are declared to produce in
+    * [[graft.queries.Artifacts]] are cleared), consumers keep the memo
     * and measure the marginal post-producer cost — the economics the
     * memo exists to provide.
     */
-  def clearProducerMemo(name: String): Unit = name match {
-    // q50 must measure the clustering COMPUTATION on every repeat:
-    // it populates the session ClusterMemo, which would otherwise
-    // hand repeats 2..n the cached labels. Consumers (q61/q63) keep
-    // the memo — their number is the marginal cost a pipeline pays
-    // after the producer ran, which is the point of the memo.
-    case "q50_neardup_clusters" => graft.queries.ClusterMemo.clear()
-    // q46 is the embedding pair-table producer — same clearing rule;
-    // q118 produces the trained-quantizer artifact q119 consumes
-    case "q46_embedding_neardup" => graft.queries.EmbMemo.clear()
-    case "q118_kmeans_lloyd" => graft.queries.EmbMemo.clearKmeans()
-    // q122 produces the winnow-selection artifact q126/q127 consume
-    case "q122_winnow_fingerprints" => graft.queries.GramMemo.clearWinnow()
-    // q80 produces the decontamination gram-key artifact that
-    // q125/q126 consume
-    case "q80_contamination_fraction" => graft.queries.GramMemo.clearLeak()
-    // q93 produces the session BM25 score table q109/q111/q129 consume
-    case "q93_bm25_topk" => graft.queries.RetrievalMemo.clear()
-    // q38 produces the per-doc curation-feature table
-    // (quality/lang-id/token counts/fingerprint) the feature
-    // consumers ride
-    case "q38_text_quality" => graft.queries.FeatureMemo.clear()
-    // q43 produces the SimHash pair artifact q136 consumes
-    case "q43_simhash_hamming_pairs" =>
-      graft.queries.ClusterMemo.clearSimhash()
-    // q94 produces the exact ground-truth pair artifact q148 audits
-    case "q94_prefix_jaccard_pairs" =>
-      graft.queries.ClusterMemo.clearExactPairs()
-    case _ => ()
-  }
+  def clearProducerMemo(name: String): Unit =
+    graft.queries.Artifacts.clearProducedBy(name)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -77,11 +54,14 @@ object Bench {
     // by far the most whole-stage-codegen classes; which earlier query
     // happened to compile them decided whether q50-family queries
     // measured 4 s or 40 s run-to-run, so warm that path explicitly.
-    val warmups = SparkEntry.queries.take(1) ++
-      SparkEntry.queries.get("q50_neardup_clusters").map("w" -> _)
-    warmups.foreach { case (_, fn) =>
+    val q50 = "q50_neardup_clusters"
+    val warmups = SparkEntry.queries.take(1).toSeq ++
+      SparkEntry.queries.get(q50).map(q50 -> _)
+    warmups.foreach { case (name, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $name failed: $e")
+      }
     }
 
     // optional comma-separated name-prefix filter for targeted local runs
@@ -98,25 +78,33 @@ object Bench {
     // window outlasts all three, which the isolated re-run protocol in
     // REPRO.md then catches.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to repeats).map { r =>
+    // a repeat that throws ends its query: the query's status is failed
+    // and none of its times count
+    val outcomes = selected.map { case (name, fn) =>
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var failed = false
+      for (r <- 1 to repeats if !failed) {
         clearProducerMemo(name)
         System.err.println(s"[bench] running $name ($r/$repeats)")
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed = true
         }
-        val dt = (System.nanoTime() - t0) / 1e9
         // untimed: broadcasts/shuffle state are reclaimed by the
         // ContextCleaner only when the driver GCs — without this, state
         // from 60+ prior queries piles up and the late queries pay the
         // GC wall
         System.gc()
-        dt
       }
-      name -> times
+      (name, times.toSeq, failed)
     }
+    val results = outcomes.collect { case (n, t, false) => n -> t }
+    val failedJson = outcomes.collect { case (n, _, true) => "\"" + n + "\"" }
+      .mkString("[", ",", "]")
     // Locale.ROOT: the f interpolator uses the default JVM locale, which
     // renders comma decimal separators (invalid JSON) on e.g. pt_BR
     def num(v: Double): String =
@@ -131,7 +119,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2.min).sum
     val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"samples":$samples,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"samples":$samples,"failed":$failedJson,"sf":"$sfDir"}"""
     // the r5 artifact arrived truncated MID-JSON (the driver captures a
     // bounded output tail): flush the line immediately, mirror it on
     // stderr, and persist it to a file so the artifact survives any
@@ -164,8 +152,8 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val skeleton =
       s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-        s""""n_queries":${results.size},"full":"$outFile","queries":{},""" +
-        s""""sf":"$sfDir"}"""
+        s""""n_queries":${outcomes.size},"full":"$outFile","queries":{},""" +
+        s""""failed":$failedJson,"sf":"$sfDir"}"""
     var room = 1750 - skeleton.length
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     results.sortBy { case (_, v) => -v.min }.foreach { case (k, v) =>
@@ -176,8 +164,8 @@ object Bench {
     val compactQs = picked.sortBy(_._1).map(_._2).mkString("{", ",", "}")
     val compactLine =
       s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-        s""""n_queries":${results.size},"full":"$outFile",""" +
-        s""""queries":$compactQs,"sf":"$sfDir"}"""
+        s""""n_queries":${outcomes.size},"full":"$outFile",""" +
+        s""""queries":$compactQs,"failed":$failedJson,"sf":"$sfDir"}"""
     println(compactLine)
     System.out.flush()
     System.err.println(compactLine)

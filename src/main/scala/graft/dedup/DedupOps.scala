@@ -248,7 +248,8 @@ object DedupOps {
   /** Width-parameterized SimHash (1..32 bits; see [[SimHashSig]]).
     * Width is the corpus-size lever: the Hamming-ball candidate layer's
     * background-collision term is n²/2^width, so a corpus that saturates
-    * the 16-bit space (measured at 10x sf0.1 — `tools/ProbeQ43Scale`)
+    * the 16-bit space (measured at 10x sf0.1 — `tools/ProbeQ43Scale`,
+    * commit c8aa06f)
     * moves to wider signatures ([[adaptiveSimhashWidth]]) and runs the
     * identical plan.
     */
@@ -298,7 +299,8 @@ object DedupOps {
     * set carries an intrinsic n²/2^width background-collision term as
     * signature buckets densify — at 10x sf0.1 the 16-bit space holds 50k
     * docs in 7.7k distinct signatures and the pair table is 10.4x the 1x
-    * one (`tools/ProbeQ43Scale`); the 100 TB setting of the SAME plan is
+    * one (`tools/ProbeQ43Scale`, commit c8aa06f); the 100 TB setting of
+    * the SAME plan is
     * width 32 (distinct-signature table <= 4.3e9 rows only in the
     * adversarial limit; in practice ~n until n approaches 2^32, and the
     * mask explode stays 529 rows per distinct signature). Widening at a
@@ -1357,7 +1359,8 @@ object DedupOps {
     * chance-collision pairs, so the earlier join-the-grams-per-pair
     * shape re-shuffled every doc's array once per pair — measured 117
     * GB of gram payload at the ×100 ladder rung (140M pairs × 2 × 52
-    * grams, tools/ProbePairGrowth) vs ~0.8 GB for once-per-band
+    * grams, tools/ProbePairGrowth at commit c8aa06f) vs ~0.8 GB for
+    * once-per-band
     * shipment. Bucket memory is bounded by the same m² guard as
     * [[lshCandidatePairs]] (a maxBucket bucket holds maxBucket ×
     * (id + sig + gram array) in one aggregation buffer).

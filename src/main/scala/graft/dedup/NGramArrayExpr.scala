@@ -188,7 +188,8 @@ object NGramHashArray {
   * `eval(row)` can run — in the q50-family verify stage that row
   * carries both members' gram arrays (~1 KB), rebuilt once per
   * CANDIDATE PAIR. Measured at the ×10 rung: 240 s of task GC time on
-  * a 788 s-run stage (ProbeQ50x10). The generated code now calls the
+  * a 788 s-run stage (ProbeQ50x10, commit c8aa06f). The generated code
+  * now calls the
   * allocation-free static merge directly on the already-bound
   * [[ArrayData]] locals — no row buffer, no boxing.
   */

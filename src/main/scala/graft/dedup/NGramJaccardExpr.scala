@@ -1,8 +1,9 @@
 package graft.dedup
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram Jaccard similarity of two texts as ONE native pass —
@@ -27,6 +28,16 @@ case class NGramJaccard(left: Expression, right: Expression, n: Int)
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "ngram_jaccard"
+
+  // both children are read as UTF8String: any other type must fail at
+  // analysis, not cast wrongly at run time
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two STRING arguments, got " +
+          s"${l.simpleString} and ${r.simpleString}")
+    }
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     NGramJaccard.jaccard(a.asInstanceOf[UTF8String],

@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `width` (1..32; md5 has 32 nibbles) is THE corpus-size lever of the
   * SimHash family: Hamming-ball candidate generation pays an intrinsic
   * n²/2^width background-collision term as the signature space saturates
-  * (measured in `tools/ProbeQ43Scale` — at 10x sf0.1 the 16-bit space
+  * (measured in `tools/ProbeQ43Scale`, commit c8aa06f — at 10x sf0.1
+  * the 16-bit space
   * holds 50k docs in 7.7k distinct signatures), so a 100 TB corpus runs
   * the same plan at width 32. Widening REFINES rather than reshuffles:
   * bit j depends only on nibble j, so the low 16 bits of a 32-bit

@@ -133,7 +133,8 @@ object ArtifactStore {
     * objects, GC-invisible, spills cleanly. The sf0.1 board price is
     * real but bounded: the largest artifact producers pay the
     * serialize+materialize pass (q43's 6.6M-row pair pin measures
-    * ~2-3 s over its ~2.5 s compute; tools/ProbeR3) — the explicit
+    * ~2-3 s over its ~2.5 s compute; tools/ProbeR3 at
+    * commit c8aa06f) — the explicit
     * price of the ×100 rung completing at all.
     *
     * Commit is write-to-temp + atomic rename: two JVMs racing on the

@@ -24,14 +24,7 @@ object BpeMemo {
     */
   val K = 10
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  def clear(): Unit = cache.clear()
-
   def vocab(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "bpe_vocab", eager = false) {
-        Bpe.learnFromWords(GramMemo.words(s, d), "words", K)._2
-      })
+    Artifacts.BpeVocab(s, d)(
+      Bpe.learnFromWords(GramMemo.words(s, d), "words", K)._2)
 }

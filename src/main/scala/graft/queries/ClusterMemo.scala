@@ -21,12 +21,12 @@ import graft.dedup.DedupOps
   *   - the clustering itself is memoized one level up, keyed by
   *     threshold, so q63's manifest reads q50's labels.
   *
-  * Entries are keyed by (session identity, sfDir) and hold
-  * `localCheckpoint`ed frames: the first caller materializes, every
-  * same-session caller reuses the blocks. `Bench` clears the memo before
-  * each timed repeat of the PRODUCER (q50) so its number keeps measuring
-  * computation; consumers (q61/q63) keep the memo and measure the
-  * marginal cost a pipeline actually pays after the producer ran.
+  * Entries are [[Artifacts]] declarations, cached per (session identity,
+  * sfDir): the first caller materializes, every same-session caller
+  * reuses the blocks. Each declaration names the PRODUCER (q50, and q43
+  * or q94 for their artifacts) whose timed repeat rebuilds it;
+  * consumers (q61/q63) measure the marginal cost a pipeline actually
+  * pays after the producer ran.
   */
 object ClusterMemo {
 
@@ -36,57 +36,15 @@ object ClusterMemo {
   val RowsPerBand = 2
   val NGram = 3
 
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Double), DataFrame]
-  private val corpusLabelCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Double, Int),
-      DataFrame]
-  private val bandIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Int), DataFrame]
-  private val incrArtifactCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Int), DataFrame]
-  private val simhashSigCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (Int, DataFrame)]
-  private val simhashSigPairCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  def clear(): Unit = {
-    pairCache.clear(); clusterCache.clear(); corpusLabelCache.clear()
-    bandIndexCache.clear(); incrArtifactCache.clear()
-    simhashSigCache.clear(); simhashSigPairCache.clear()
-    exactPairCache.clear()
-  }
-
-  /** Bench clears only this before each repeat of the PRODUCER (q43)
-    * so q43 keeps measuring the sketch pass + Hamming-ball pair
-    * generation; q136's agreement matrix reads the warm artifacts —
-    * the marginal cost after the sketch store is built.
-    */
-  def clearSimhash(): Unit = {
-    simhashSigCache.clear(); simhashSigPairCache.clear()
-  }
-
-  /** Bench clears only this before each repeat of the PRODUCER (q94)
-    * so q94 keeps measuring the prefix-filtered join; q148's recall
-    * audit reads the warm ground-truth pair table.
-    */
-  def clearExactPairs(): Unit = exactPairCache.clear()
-
-  private val exactPairCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   /** The exact J ≥ 0.5 prefix-filtered (PPJoin) pair table — q94's
     * RESULT, the provably-complete ground truth q148 audits the banded
     * LSH against; materialized once per (session, sfDir).
     */
   def exactPairs(s: SparkSession, d: String): DataFrame =
-    exactPairCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "exact_pairs", eager = false) {
-        DedupOps.prefixJaccardPairsOfWords(
-          GramMemo.words(s, d), "doc_id", "words", 0.5)
-      })
+    Artifacts.ExactPairs(s, d) {
+      DedupOps.prefixJaccardPairsOfWords(
+        GramMemo.words(s, d), "doc_id", "words", 0.5)
+    }
 
   /** (width, SimHash sketch table (doc_id, simhash)) — the per-doc
     * signature column a production pipeline STORES (the one corpus
@@ -97,7 +55,7 @@ object ClusterMemo {
     * 31)) so the induced pair table's n²/2^width background-collision
     * term stays ~n/256 — linear — at any corpus size, instead of the
     * measured 10.4× pair blow-up the fixed 16-bit width paid at ×10
-    * sf0.1 (`tools/ProbeQ43Scale`, SCALE10's 0.86 exponent). The count
+    * sf0.1 (SCALE10's 0.86 exponent). The count
     * that picks the width is one metadata-cheap scan of doc_ids; the
     * DuckDB oracle computes the identical width from `count(*)` with
     * integer-exact ceil-log2 (`length(bin(n-1))`), so engine and
@@ -115,17 +73,17 @@ object ClusterMemo {
     * reclaim disk by deleting the name dir.
     */
   def simhashSigs(s: SparkSession, d: String): (Int, DataFrame) =
-    simhashSigCache.getOrElseUpdate((System.identityHashCode(s), d), {
+    Artifacts.SimhashSigs.memo(s, d) {
       val w = DedupOps.adaptiveSimhashWidth(
         Tables.documents(s, d).select(col("doc_id")).count())
-      // eager (the loadOrBuild exception): the first consuming plan —
-      // the doc-pair derive — references the sketch on BOTH join sides,
-      // and a lazy pin would compute the corpus scan twice in that job
-      (w, ArtifactStore.loadOrBuild(s, d, s"simhash_sigs_w$w") {
+      // eager: the first consuming plan — the doc-pair derive —
+      // references the sketch on BOTH join sides, and a lazy pin would
+      // compute the corpus scan twice in that job
+      (w, Artifacts.SimhashSigs.pinned(s, d, w) {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
         DedupOps.withSimhash(docs, "text", "simhash", w).drop("text")
       })
-    })
+    }
 
   /** Distinct-signature Hamming-ball pairs (s1, s2, hamming) at the
     * adaptive (width, radius) — the ball-enumeration product, bounded
@@ -151,11 +109,9 @@ object ClusterMemo {
   def simhashSigPairs(s: SparkSession, d: String): DataFrame = {
     val (w, sigs) = simhashSigs(s, d)
     val dist = DedupOps.adaptiveSimhashDist(w)
-    simhashSigPairCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, s"simhash_sigpairs_w${w}d$dist",
-        eager = false) {
-        DedupOps.simhashSigPairs(sigs, "simhash", maxDist = dist, width = w)
-      })
+    Artifacts.SimhashSigPairs(s, d, w, dist) {
+      DedupOps.simhashSigPairs(sigs, "simhash", maxDist = dist, width = w)
+    }
   }
 
   /** SimHash adaptive-ball pair table (id_a, id_b, hamming) — the q43
@@ -181,16 +137,13 @@ object ClusterMemo {
     */
   def corpusLabels(s: SparkSession, d: String, threshold: Double,
                    batchMod: Int): DataFrame =
-    corpusLabelCache.getOrElseUpdate(
-      (System.identityHashCode(s), d, threshold, batchMod),
-      ArtifactStore.loadOrBuild(s, d,
-        s"corpus_labels_t${threshold}_m$batchMod") {
-        val corpus = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % batchMod =!= 0)
-        DedupOps.nearDupClusters(corpus, "doc_id", "text", threshold)
-          .select(col("doc_id"), col("cluster_id"))
-      })
+    Artifacts.CorpusLabels(s, d, threshold, batchMod) {
+      val corpus = Tables.documents(s, d)
+        .select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % batchMod =!= 0)
+      DedupOps.nearDupClusters(corpus, "doc_id", "text", threshold)
+        .select(col("doc_id"), col("cluster_id"))
+    }
 
   /** "Yesterday's" corpus band index for q108 — the second stored
     * artifact of the incremental-admission loop ([[corpusLabels]] is the
@@ -201,19 +154,16 @@ object ClusterMemo {
     * re-hashes a corpus document (gated in PlanShapeSpec).
     */
   def corpusBandIndex(s: SparkSession, d: String, batchMod: Int): DataFrame =
-    bandIndexCache.getOrElseUpdate(
-      (System.identityHashCode(s), d, batchMod),
-      // v2: r12 numeric band keys changed the index schema to
-      // (bi, band:long, cands) — the new name self-invalidates any
-      // store populated with the hex-key schema (the simhash width
-      // precedent above)
-      ArtifactStore.loadOrBuild(s, d, s"corpus_band_index_v2_m$batchMod") {
-        val corpus = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % batchMod =!= 0)
-        DedupOps.bandIndex(corpus, "doc_id", "text", ShingleK, NumHashes,
-            RowsPerBand, NGram)
-      })
+    // v2: r12 numeric band keys changed the index schema to
+    // (bi, band:long, cands) — the new name self-invalidates any store
+    // populated with the hex-key schema (the simhash width precedent)
+    Artifacts.CorpusBandIndex(s, d, batchMod) {
+      val corpus = Tables.documents(s, d)
+        .select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % batchMod =!= 0)
+      DedupOps.bandIndex(corpus, "doc_id", "text", ShingleK, NumHashes,
+          RowsPerBand, NGram)
+    }
 
   /** "Yesterday's" per-doc dedup artifacts for the incremental-admission
     * query (q76): the corpus slice's (doc_id, m0..m7 MinHash signature,
@@ -225,14 +175,11 @@ object ClusterMemo {
     * cost; the full-recompute oracle remains the equivalence proof.
     */
   def incrDocArtifacts(s: SparkSession, d: String, batchMod: Int): DataFrame =
-    incrArtifactCache.getOrElseUpdate(
-      (System.identityHashCode(s), d, batchMod),
-      // v2: m0..m7 became longs (withMinhashSignatureNum) in r12 — new
-      // name so a hex-era store can never serve the old schema
-      ArtifactStore.loadOrBuild(s, d, s"incr_doc_artifacts_v2_m$batchMod")(
-        incrDocArtifactsPlan(
-          Tables.documents(s, d).select(col("doc_id"), col("text"))
-            .filter(col("doc_id") % batchMod =!= batchMod - 1))))
+    // v2: m0..m7 became longs (withMinhashSignatureNum) in r12 — new
+    // name so a hex-era store can never serve the old schema
+    Artifacts.IncrDocArtifacts(s, d, batchMod)(incrDocArtifactsPlan(
+      Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % batchMod =!= batchMod - 1)))
 
   /** The artifact derivation shared by the memoized corpus slice and the
     * per-call batch slice: one scan, every hash expression once.
@@ -258,8 +205,8 @@ object ClusterMemo {
     * doc's verify grams onto the pair list twice, which re-shuffles
     * every doc's gram array ONCE PER PAIR IT APPEARS IN. Candidate
     * volume grows linearly with the corpus but each doc sits in
-    * hundreds of chance-collision pairs (tools/ProbePairGrowth at the
-    * ×100 ladder rung: 140M distinct pairs over 500k docs, avg 52
+    * hundreds of chance-collision pairs (measured at the ×100 ladder
+    * rung: 140M distinct pairs over 500k docs, avg 52
     * grams/doc → the per-pair form moves ~117 GB of gram payload
     * through two shuffles, which is a non-event spread over a cluster
     * but killed the single-box ladder run at 80 GB of spill). Carrying
@@ -331,26 +278,21 @@ object ClusterMemo {
 
   /** Scored candidate pairs, materialized once per (session, sfDir). */
   def scoredPairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "scored_pairs", eager = false)(
-        scoredPairsPlan(s, d)))
+    Artifacts.ScoredPairs(s, d)(scoredPairsPlan(s, d))
 
   /** Near-dup clustering over the memoized pairs: one row per document
     * (doc_id, cluster_id, n_members, is_rep) — the q50 result shape.
     */
   def clusters(s: SparkSession, d: String, threshold: Double): DataFrame =
-    clusterCache.getOrElseUpdate(
-      (System.identityHashCode(s), d, threshold),
-      ArtifactStore.loadOrBuild(s, d, s"clusters_t$threshold",
-        eager = false) {
-        import org.apache.spark.sql.expressions.Window
-        val edges = scoredPairs(s, d).filter(col("jaccard") >= threshold)
-          .select(col("id_a").as("a"), col("id_b").as("b"))
-        val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
-        DedupOps.connectedComponents(nodes, edges)
-          .select(col("id").as("doc_id"), col("cluster_id"))
-          .withColumn("n_members", count(lit(1))
-            .over(Window.partitionBy(col("cluster_id"))).cast("long"))
-          .withColumn("is_rep", col("doc_id") === col("cluster_id"))
-      })
+    Artifacts.Clusters(s, d, threshold) {
+      import org.apache.spark.sql.expressions.Window
+      val edges = scoredPairs(s, d).filter(col("jaccard") >= threshold)
+        .select(col("id_a").as("a"), col("id_b").as("b"))
+      val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
+      DedupOps.connectedComponents(nodes, edges)
+        .select(col("id").as("doc_id"), col("cluster_id"))
+        .withColumn("n_members", count(lit(1))
+          .over(Window.partitionBy(col("cluster_id"))).cast("long"))
+        .withColumn("is_rep", col("doc_id") === col("cluster_id"))
+    }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * splits and centrality from the stored artifact — it never re-sketches
   * the embedding corpus per consumer.
   *
-  * q46 is the PRODUCER: `Bench` clears this memo before each timed q46
-  * repeat so its number keeps measuring the sketch+verify computation;
-  * consumers measure the marginal cost after the artifact exists.
+  * q46 is the PRODUCER ([[Artifacts.EmbPairs]]): its timed repeats keep
+  * measuring the sketch+verify computation; consumers measure the
+  * marginal cost after the artifact exists.
   * [[pairsPlan]] stays public so PlanShapeSpec can gate the candidate
   * plan shape (equi-joins only) that the memoized checkpoint would hide.
   */
@@ -24,34 +24,17 @@ object EmbMemo {
   /** Board-wide cosine threshold of the embedding near-dup family. */
   val Threshold = 0.2
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  def clear(): Unit = { cache.clear(); kmeansCache.clear() }
-
-  /** Clears only the trained-quantizer artifact — `Bench` calls this
-    * before each timed repeat of the PRODUCER q118 so its number keeps
-    * measuring the training; the consumer q119 reads the warm artifact
-    * (a vector store trains cells once and serves many searches).
-    */
-  def clearKmeans(): Unit = kmeansCache.clear()
-
   /** Trained k-means centroid row ([[Pipeline15.kmeansCentroidRow]]),
-    * materialized once per (session, sfDir).
+    * memoized once per (session, sfDir). Store-only
+    * ([[Artifacts.KmeansCents]]): without a store the lazy plan is kept
+    * (kmeansCentroidRow pins its own state). Its producers are q46 and
+    * q118; the consumer q119 reads the warm artifact (a vector store
+    * trains cells once and serves many searches).
     */
   def kmeansCents(s: SparkSession, d: String): DataFrame =
-    kmeansCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      // one builder bound once: the store path persists it, the default
-      // keeps the r7 lazy plan (kmeansCentroidRow pins its own state)
-      def build = Pipeline15.kmeansCentroidRow(
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding")
-      if (ArtifactStore.dirOf(s).isDefined)
-        ArtifactStore.loadOrBuild(s, d, "kmeans_cents")(build)
-      else build
-    })
+    Artifacts.KmeansCents(s, d)(Pipeline15.kmeansCentroidRow(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      "vec_id", "embedding"))
 
   /** The un-memoized pair lineage: (id_a, id_b, hamming, sim). */
   def pairsPlan(s: SparkSession, d: String): DataFrame =
@@ -61,7 +44,5 @@ object EmbMemo {
 
   /** Verified pair table, materialized once per (session, sfDir). */
   def pairs(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "emb_pairs", eager = false)(
-        pairsPlan(s, d)))
+    Artifacts.EmbPairs(s, d)(pairsPlan(s, d))
 }

@@ -23,71 +23,34 @@ import graft.text.TextOps
   */
 object GramMemo {
 
-  private val wordsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val winnowStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val leakCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val contamCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  def clear(): Unit = { wordsCache.clear(); winnowCache.clear()
-    winnowStatsCache.clear(); leakCache.clear(); contamCache.clear() }
-
-  /** Clears only the winnow-selection artifact — `Bench` calls this
-    * before each timed repeat of the PRODUCER q122 so its number keeps
-    * measuring the selection; consumers (q126 health, q127 families)
-    * read the warm artifact, which is the marginal cost a pipeline
-    * pays after its fingerprint store is built.
-    */
-  def clearWinnow(): Unit = { winnowCache.clear(); winnowStatsCache.clear() }
-
   /** The winnowing selection (doc_id, n_grams, fps) at the board-wide
     * (k, w) = (4, 8) — [[Pipeline16.winnowBase]] over [[words]],
-    * materialized once per (session, sfDir). A production dedup service
+    * memoized once per (session, sfDir). A production dedup service
     * stores this per admitted doc; q122 (stats), q126 (health) and
-    * q127 (families) all read the same artifact.
+    * q127 (families) all read the same artifact. Store-only
+    * ([[Artifacts.Winnow]]): without a store the lazy plan is memoized
+    * and consumers derive from the pinned words table. Its producer is
+    * q122: consumers read the warm artifact, the marginal cost a
+    * pipeline pays after its fingerprint store is built.
     */
   def winnow(s: SparkSession, d: String): DataFrame =
-    winnowCache.getOrElseUpdate((System.identityHashCode(s), d),
-      {
-        // store configured → persist the selection (the per-doc
-        // fingerprint table a dedup service keeps); unset → keep the
-        // r7 lazy plan: consumers derive from the pinned words table,
-        // and q122's bench number keeps measuring the selection
-        def build = Pipeline16.winnowBase(words(s, d))
-        if (ArtifactStore.dirOf(s).isDefined)
-          ArtifactStore.loadOrBuild(s, d, "winnow")(build)
-        else build
-      })
+    Artifacts.Winnow(s, d)(Pipeline16.winnowBase(words(s, d)))
 
   /** The per-doc fingerprint-sharing stats (doc_id, n_grams, n_fps,
     * n_shared_fps, max_fp_docs) over [[winnow]] — the q122 RESULT,
     * materialized once: the sharing election (explode → df count →
     * per-doc fold) is the expensive half of the winnow family, and both
     * q122 (the report) and q126's dup-share branch need exactly these
-    * rows. Cleared with [[clearWinnow]] so q122's bench number keeps
-    * measuring the election.
+    * rows. Produced by q122 with [[winnow]] ([[Artifacts.WinnowStats]]).
     */
   def winnowStats(s: SparkSession, d: String): DataFrame =
-    winnowStatsCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "winnow_stats", eager = false)(
-        Pipeline16.winnowFingerprintsFromBase(winnow(s, d))))
+    Artifacts.WinnowStats(s, d)(
+      Pipeline16.winnowFingerprintsFromBase(winnow(s, d)))
 
   /** The decontamination family's gram-n (q56/q80/q125/q126 all probe
     * word 3-grams).
     */
   val LeakN = 3
-
-  /** Bench clears this before each timed repeat of the PRODUCER (q80)
-    * so its number keeps measuring the gram derivation; q125/q126 read
-    * the warm artifact — the marginal cost after the decontamination
-    * store is built.
-    */
-  def clearLeak(): Unit = { leakCache.clear(); contamCache.clear() }
 
   /** (doc_id, source, gks) — each doc's DISTINCT word-3-gram keys (the
     * NGramArray set semantics every consumer's oracle mirrors)
@@ -104,13 +67,11 @@ object GramMemo {
     * it per doc, q126's health branch aggregates it per source, and a
     * production decontamination service stores exactly these flags per
     * admitted doc rather than re-probing the corpus per dashboard.
-    * Cleared with [[clearLeak]] so q80's bench number keeps measuring
-    * the probe.
+    * Its producer is q80 ([[Artifacts.ContamStats]]); q125/q126 read the
+    * warm artifact.
     */
   def contamStats(s: SparkSession, d: String): DataFrame =
-    contamCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "contam_stats", eager = false)(
-        contamStatsPlan(s, d)))
+    Artifacts.ContamStats(s, d)(contamStatsPlan(s, d))
 
   /** The un-memoized probe lineage (public so PlanShapeSpec can gate the
     * PLAN — broadcast eval set, no shuffle join — which the checkpoint
@@ -131,23 +92,22 @@ object GramMemo {
   }
 
   def leak(s: SparkSession, d: String): DataFrame =
-    leakCache.getOrElseUpdate((System.identityHashCode(s), d),
-      // eager (the loadOrBuild exception): contamStatsPlan references
-      // this table on both its eval and corpus branches in one job
-      ArtifactStore.loadOrBuild(s, d, "leak_grams") {
-        val n = LeakN
-        // greatest(..., 0) clamp, NOT a when() guard: NGramArray and the
-        // oracle (generate_series(0, greatest(len(w)-n, 0))) emit one
-        // clamped gram for docs with < n words — slice() past the array
-        // end truncates, reproducing that exactly. A guard returning []
-        // would zero n_grams for short docs and null q80's overlap_frac.
-        words(s, d).select(col("doc_id"), col("source"),
-          array_distinct(transform(
-            sequence(lit(0), greatest(size(col("words")) - n, lit(0))),
-            i => substring(md5(to_binary(
-              array_join(slice(col("words"), i + 1, lit(n)), " "),
-              lit("utf-8"))), 1, 16))).as("gks"))
-      })
+    // eager ([[Artifacts.LeakGrams]]): contamStatsPlan references this
+    // table on both its eval and corpus branches in one job
+    Artifacts.LeakGrams(s, d) {
+      val n = LeakN
+      // greatest(..., 0) clamp, NOT a when() guard: NGramArray and the
+      // oracle (generate_series(0, greatest(len(w)-n, 0))) emit one
+      // clamped gram for docs with < n words — slice() past the array
+      // end truncates, reproducing that exactly. A guard returning []
+      // would zero n_grams for short docs and null q80's overlap_frac.
+      words(s, d).select(col("doc_id"), col("source"),
+        array_distinct(transform(
+          sequence(lit(0), greatest(size(col("words")) - n, lit(0))),
+          i => substring(md5(to_binary(
+            array_join(slice(col("words"), i + 1, lit(n)), " "),
+            lit("utf-8"))), 1, 16))).as("gks"))
+    }
 
   /** (doc_id, lang, source, words) — `split(normalize(text), " ")` plus
     * the per-doc metadata columns, materialized once per (session,
@@ -158,15 +118,14 @@ object GramMemo {
     * normalize to get words WITH their labels.
     */
   def words(s: SparkSession, d: String): DataFrame =
-    wordsCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "words", eager = false) {
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("source"), col("text"))
-          // spread RAW rows first: projecting before the exchange would
-          // run the whole-corpus regex normalize inside the one input
-          // partition (measured 5.5 s vs 0.6 s at sf0.1)
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(col("doc_id"), col("lang"), col("source"),
-            split(TextOps.normalize(col("text")), " ").as("words"))
-      })
+    Artifacts.Words(s, d) {
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        // spread RAW rows first: projecting before the exchange would
+        // run the whole-corpus regex normalize inside the one input
+        // partition (measured 5.5 s vs 0.6 s at sf0.1)
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(col("doc_id"), col("lang"), col("source"),
+          split(TextOps.normalize(col("text")), " ").as("words"))
+    }
 }

@@ -17,42 +17,27 @@ import graft.text.TrigramLm
   */
 object LmMemo {
 
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private val collectedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String), TrigramLm.CollectedModel]
-
-  def clear(): Unit = {
-    countCache.clear(); modelCache.clear(); collectedCache.clear()
-  }
-
   /** Full-corpus trigram counts (tri, c), materialized once per
     * (session, sfDir).
     */
   def trigramCounts(s: SparkSession, d: String): DataFrame =
-    countCache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "trigram_counts", eager = false)(
-        TrigramLm.counts(
-          Tables.documents(s, d).select(col("doc_id"), col("text")),
-          "doc_id", "text")))
+    Artifacts.TrigramCounts(s, d)(TrigramLm.counts(
+      Tables.documents(s, d).select(col("doc_id"), col("text")),
+      "doc_id", "text"))
 
   /** The ONE-ROW broadcastable model ([[TrigramLm.modelFrame]]: logp map
     * + unseen default) over [[trigramCounts]] — the probe payload both
     * q87 and the streaming LM admission score against.
     */
   def trigramModel(s: SparkSession, d: String): DataFrame =
-    modelCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      TrigramLm.modelFrame(trigramCounts(s, d)).localCheckpoint()
-    })
+    Artifacts.TrigramModel(s, d)(
+      TrigramLm.modelFrame(trigramCounts(s, d)).localCheckpoint())
 
   /** Driver-array form of the model — the [[TrigramLmScore]] expression
     * payload q87 scores with (bounded by the trigram space; see
     * [[TrigramLm.collectModel]]).
     */
   def collectedModel(s: SparkSession, d: String): TrigramLm.CollectedModel =
-    collectedCache.getOrElseUpdate((System.identityHashCode(s), d),
+    Artifacts.TrigramModelCollected.memo(s, d)(
       TrigramLm.collectModel(trigramCounts(s, d)))
 }

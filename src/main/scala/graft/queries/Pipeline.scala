@@ -188,8 +188,8 @@ object Pipeline {
     FROM sc ORDER BY doc_id"""
 
   // ------------------------------------------------------------------- q38
-  // q38 is the feature table's DESIGNATED PRODUCER: Bench clears the
-  // memo before each timed repeat so this number measures the one
+  // q38 is the feature table's DESIGNATED PRODUCER (Artifacts.DocFeatures):
+  // Bench clears it before each timed repeat so this number measures the one
   // ingestion-time feature computation; every other consumer measures
   // the marginal cost of reading stored features.
   private val q38: Q = (s, d) =>

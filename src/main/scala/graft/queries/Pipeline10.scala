@@ -146,7 +146,7 @@ object Pipeline10 {
   private val BmTopK = 20
 
   // q93 is the DESIGNATED PRODUCER of the session BM25 score table
-  // (RetrievalMemo) that q109/q111/q129 consume — Bench clears the memo
+  // (Artifacts.Bm25Scores) that q109/q111/q129 consume — Bench clears it
   // before each q93 repeat so this query measures the retrieval
   // computation while the consumers measure their marginal cost.
   private val q93: Q = (s, d) => {
@@ -175,8 +175,8 @@ object Pipeline10 {
   private val PrefixT = 0.5
 
   // q94 is the PRODUCER of the exact ground-truth pair artifact q148's
-  // LSH recall audit consumes (ClusterMemo.exactPairs; Bench clears it
-  // before each q94 repeat).
+  // LSH recall audit consumes (Artifacts.ExactPairs declares q94 its
+  // producer, so Bench clears it before each q94 repeat).
   private val q94: Q = (s, d) =>
     ClusterMemo.exactPairs(s, d).orderBy(col("id_a"), col("id_b"))
 

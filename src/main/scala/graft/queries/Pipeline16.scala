@@ -393,8 +393,8 @@ object Pipeline16 {
   // handful of rows. Nothing new shuffles.
   private val HealthContamFrac = 0.25
 
-  /** q126's diagnostic branches, individually — for the branch profiler
-    * (`tools.ProfileQ126`). Each returns (source, ...cols).
+  /** q126's diagnostic branches, individually, so each can be timed on
+    * its own. Each returns (source, ...cols).
     */
   def healthBranches(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}

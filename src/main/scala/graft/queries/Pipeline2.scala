@@ -34,8 +34,8 @@ object Pipeline2 {
   // operation you cannot afford at 100 TB. The correctness gate sorts
   // rows itself before hashing, so ordering carries no semantics here.
   // q43 is the PRODUCER of the session SimHash pair artifact q136's
-  // agreement matrix consumes (ClusterMemo.simhashPairs; Bench clears
-  // it before each q43 repeat).
+  // agreement matrix consumes (Artifacts.SimhashSigs/SimhashSigPairs
+  // declare q43 their producer, so Bench clears them per q43 repeat).
   private val q43: Q = (s, d) => ClusterMemo.simhashPairs(s, d)
 
   private lazy val q43Sql = s"""${OracleSql.simhashSigCtesAdaptive}
@@ -108,7 +108,7 @@ object Pipeline2 {
   // sketch (md5-parity planes, engine-portable) → Hamming-ball candidates
   // over distinct sketches → exact cosine verify on candidates only.
   // PRODUCER of the session EmbMemo pair artifact (q54/q69/q116 consume
-  // it; Bench clears the memo before each timed q46 repeat).
+  // it; Artifacts.EmbPairs declares q46 its producer).
   private val q46: Q = (s, d) =>
     EmbMemo.pairs(s, d).orderBy(col("id_a"), col("id_b"))
 

@@ -245,7 +245,7 @@ object Pipeline7 {
   // materialize the (narrow, pair-bounded) DP verdicts before the
   // output sort: orderBy's range-partition SAMPLING job re-executes
   // its child lineage, which here is the O(len²) DP stage — measured
-  // 2x the whole query (ProfileQ81). The checkpoint runs the DP
+  // 2x the whole query (ProfileQ81, commit c8aa06f). The checkpoint runs the DP
   // once; the sort then samples 20k materialized rows for free.
   private val q81: Q = (s, d) =>
     editDistPlan(s, d).localCheckpoint().orderBy(col("id_a"), col("id_b"))

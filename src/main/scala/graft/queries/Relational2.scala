@@ -62,21 +62,27 @@ object Relational2 {
   // 1.61/2.41/6.10 s vs split 1.13/1.83/4.41 s at ×1/×10/×30 — the
   // Expand loses at every rung and the gap widens with scale.
   // Equivalence: countDistinct skips NULL keys, hence the isNotNull
-  // guards; TPC-H lineitem keys are non-null, so every returnflag
-  // group survives each branch and the inner joins are lossless
-  // (collect-checked at every probe rung; oracle-pinned each round).
+  // guards. A group whose keys of one branch are all NULL has no row in
+  // that branch, so every count is left-joined onto the spine of all
+  // l_returnflag values (null-safe, as GROUP BY keeps a NULL flag) and
+  // a missing count reads 0, exactly as countDistinct reports it.
   private val q28: Q = (s, d) => {
     val li = lineitem(s, d)
+    val flag = "l_returnflag"
     def dcount(keys: Seq[String], alias: String) =
-      li.select(("l_returnflag" +: keys).map(col): _*)
+      li.select((flag +: keys).map(col): _*)
         .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-        .groupBy(("l_returnflag" +: keys).map(col): _*).agg(lit(1))
-        .groupBy(col("l_returnflag")).agg(count(lit(1)).as(alias))
-    dcount(Seq("l_orderkey"), "n_orders")
-      .join(dcount(Seq("l_partkey"), "n_parts"), Seq("l_returnflag"))
-      .join(dcount(Seq("l_suppkey", "l_partkey"), "n_supp_part"),
-        Seq("l_returnflag"))
-      .orderBy(col("l_returnflag"))
+        .groupBy((flag +: keys).map(col): _*).agg(lit(1))
+        .groupBy(col(flag)).agg(count(lit(1)).as(alias))
+        .withColumnRenamed(flag, "_flag")
+    Seq("n_orders" -> Seq("l_orderkey"), "n_parts" -> Seq("l_partkey"),
+        "n_supp_part" -> Seq("l_suppkey", "l_partkey"))
+      .foldLeft(li.select(col(flag)).distinct()) { case (acc, (alias, keys)) =>
+        acc.join(dcount(keys, alias), col(flag) <=> col("_flag"), "left")
+          .drop("_flag")
+          .withColumn(alias, coalesce(col(alias), lit(0L)))
+      }
+      .orderBy(col(flag))
   }
 
   private val q28Sql = """

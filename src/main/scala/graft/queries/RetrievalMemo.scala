@@ -14,10 +14,10 @@ import graft.text.Retrieval
   * [[Retrieval.bm25ScoresW]] over the session words artifact — bounded
   * by documents matching a query term, narrow, cheap to pin — so every
   * consumer is hash-identical to its self-computing form; the memo
-  * changes WHEN the scores are computed, never what they are. Bench
-  * clears it before each q93 repeat (the designated producer), so q93
-  * measures the retrieval computation and q109/q111/q129 measure the
-  * marginal cost a pipeline pays after its retrieval cache is warm.
+  * changes WHEN the scores are computed, never what they are. q93 is
+  * the declared producer ([[Artifacts.Bm25Scores]]), so q93 measures
+  * the retrieval computation and q109/q111/q129 measure the marginal
+  * cost a pipeline pays after its retrieval cache is warm.
   */
 object RetrievalMemo {
 
@@ -28,16 +28,10 @@ object RetrievalMemo {
   val K1: Double = 1.2
   val B: Double = 0.75
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  def clear(): Unit = cache.clear()
-
   /** The (doc_id, score) BM25 table for [[Terms]], materialized once per
     * (session, sfDir).
     */
   def bm25(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate((System.identityHashCode(s), d),
-      ArtifactStore.loadOrBuild(s, d, "bm25_scores", eager = false)(
-        Retrieval.bm25ScoresW(GramMemo.words(s, d), Terms, K1, B)))
+    Artifacts.Bm25Scores(s, d)(
+      Retrieval.bm25ScoresW(GramMemo.words(s, d), Terms, K1, B))
 }

@@ -63,9 +63,9 @@ object Adjudicate {
       movers.map(m => f"${m._1} ${m._3 / m._2}%.2fx").mkString(", "))
 
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${graft.Host.cpus}]")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        graft.Host.cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -95,7 +95,7 @@ object Adjudicate {
       val fn = SparkEntry.queries(name)
       // session state from the PREVIOUS adjudicated query must not
       // subsidize this one: start from empty memos, like a fresh JVM
-      BenchStore.clearMemos()
+      graft.queries.Artifacts.clearAll()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
       // a FAILED repeat must not contribute its (near-zero) elapsed time

@@ -120,7 +120,7 @@ object Demo {
           .sorted.mkString(", "))
     } finally {
       spark.conf.unset(graft.queries.ArtifactStore.DirConf)
-      graft.queries.ClusterMemo.clear()
+      graft.queries.Artifacts.clearProducedBy("q50_neardup_clusters")
       graft.queries.ArtifactStore.deleteTree(new java.io.File(storeTmp))
     }
 

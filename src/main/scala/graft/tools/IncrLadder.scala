@@ -40,7 +40,7 @@ object IncrLadder {
     val rungs = sys.env.get("SPARK_GRAFT_LADDER_RUNGS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Rungs)
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Host.cpus
     require(rungs.head == 1, s"ladder needs rung 1 first, got $rungs")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -127,7 +127,7 @@ object IncrLadder {
         // full-recompute contrast; the previous rung's stranded
         // localCheckpoint blocks are dropped eagerly (ScaleLadder's
         // GC-wall note) — WITHIN a rung the memos stay warm by design
-        BenchStore.clearMemos()
+        graft.queries.Artifacts.clearAll()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         val (tFull, tFold) = measure(name, dirs(n), warm, fold)

@@ -97,7 +97,8 @@ object Scale10 {
     *
     * Measured honesty note: this is HARDENING, not the explanation of
     * the fat LSH buckets in the scale runs. The >1000-member buckets
-    * ProbePairGrowth found at ×10 (max 2049) were unchanged by the
+    * ProbePairGrowth (commit c8aa06f) found at ×10 (max 2049) were
+    * unchanged by the
     * digit fix — member inspection showed each sits WITHIN one copy:
     * every permuted copy is an independent MinHash draw over the
     * testdata's ~40-word synthetic vocabulary, and a draw whose
@@ -203,7 +204,7 @@ object Scale10 {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Queries)
     val dst = s"target/scale$nCopies/data"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Host.cpus
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -221,7 +222,7 @@ object Scale10 {
     // every query pays its FULL lineage at both scales (memos cleared
     // per run): the exponent compares computation, not cache luck
     def runOnce(name: String, dir: String): Double = {
-      BenchStore.clearMemos()
+      graft.queries.Artifacts.clearAll()
       // drop the orphaned localCheckpoint blocks the memo clear strands
       // (ScaleLadder note: at big rungs they pin old-gen into a GC wall)
       spark.sparkContext.getPersistentRDDs.values

@@ -56,7 +56,7 @@ object ScaleLadder {
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Queries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Host.cpus
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt
     require(rungs.head == 1 && rungs.size >= 3,
       s"ladder needs rung 1 plus at least two inflated rungs, got $rungs")
@@ -94,7 +94,7 @@ object ScaleLadder {
     }.toMap
 
     def runOnce(name: String, dir: String): Double = {
-      BenchStore.clearMemos()
+      graft.queries.Artifacts.clearAll()
       // clearing the memo maps drops REFERENCES, but the localCheckpoint
       // blocks behind them stay in the block manager until the
       // ContextCleaner's weak refs process — at the ×100 rung the

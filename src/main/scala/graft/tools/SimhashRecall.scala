@@ -97,9 +97,9 @@ object SimhashRecall {
   def main(args: Array[String]): Unit = {
     val nBase = sys.env.getOrElse("SPARK_GRAFT_RECALL_NBASE", "500").toInt
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${graft.Host.cpus}]")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        graft.Host.cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

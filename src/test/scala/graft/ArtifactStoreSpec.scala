@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.{ArtifactStore, GramMemo}
+import graft.queries.{ArtifactStore, Artifacts}
 
 /** The parquet artifact store (directive: memo artifacts must survive a
   * session): with `spark.graft.artifactDir` set, a COLD session — memo
@@ -40,7 +40,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // FileSystem resolution chain, not java.io.File assumptions
     spark.conf.set(ArtifactStore.DirConf, s"file:$tmp")
     try {
-      GramMemo.clear()
+      Artifacts.clearAll()
       // warm run: builds the artifacts and persists them
       val warm122 = SparkEntry
         .queries("q122_winnow_fingerprints")(spark, d)
@@ -54,7 +54,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
         "leak artifact stored")
 
       // cold session: memo maps emptied; only the store remains
-      GramMemo.clear()
+      Artifacts.clearAll()
       val q122 = SparkEntry.queries("q122_winnow_fingerprints")(spark, d)
       val q125 = SparkEntry.queries("q125_contamination_attribution")(spark, d)
       val p122 = q122.queryExecution.executedPlan.toString
@@ -71,7 +71,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
         "stored-artifact q125 must be value-identical to the warm run")
     } finally {
       spark.conf.set(ArtifactStore.DirConf, "")
-      GramMemo.clear()
+      Artifacts.clearAll()
       ArtifactStore.deleteTree(new File(tmp))
     }
   }
@@ -104,15 +104,11 @@ class ArtifactStoreSpec extends AnyFunSuite {
         "exact_pairs" -> (() => ClusterMemo.exactPairs(spark, d)),
         "bm25_scores" -> (() => RetrievalMemo.bm25(spark, d)),
         "trigram_counts" -> (() => LmMemo.trigramCounts(spark, d)))
-      def clearAll(): Unit = {
-        ClusterMemo.clear(); RetrievalMemo.clear(); LmMemo.clear()
-        GramMemo.clear()
-      }
-      clearAll()
+      Artifacts.clearAll()
       val warm = families.map { case (n, f) => n -> f().count() }.toMap
       for ((n, _) <- families)
         assert(storedDir(s"file:$tmp", d, n), s"$n stored")
-      clearAll() // cold session: only the store remains
+      Artifacts.clearAll() // cold session: only the store remains
       for ((n, f) <- families) {
         val df = f()
         assert(df.queryExecution.executedPlan.toString.contains(tmp),
@@ -122,10 +118,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set(ArtifactStore.DirConf, "")
-      graft.queries.ClusterMemo.clear()
-      graft.queries.RetrievalMemo.clear()
-      graft.queries.LmMemo.clear()
-      GramMemo.clear()
+      Artifacts.clearAll()
       ArtifactStore.deleteTree(new java.io.File(tmp))
     }
   }

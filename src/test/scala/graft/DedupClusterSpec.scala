@@ -170,7 +170,7 @@ class DedupClusterSpec extends AnyFunSuite {
     // the shared scored-pair table) — the memoized composition must stay
     // row-identical to the direct operator it replaced.
     val d = "/root/testdata/sf0.001"
-    graft.queries.ClusterMemo.clear()
+    graft.queries.Artifacts.clearProducedBy("q50_neardup_clusters")
     val direct = DedupOps.nearDupClusters(
       spark.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"), col("text")),
@@ -212,7 +212,7 @@ class DedupClusterSpec extends AnyFunSuite {
     // the product must stay row-identical to the one-shot operator the
     // r10 memo pinned.
     val d = "/root/testdata/sf0.001"
-    graft.queries.ClusterMemo.clear()
+    graft.queries.Artifacts.clearProducedBy("q50_neardup_clusters")
     val docs = spark.read.parquet(s"$d/documents.parquet")
       .select(col("doc_id"), col("text"))
     val w = DedupOps.adaptiveSimhashWidth(docs.count())
@@ -259,7 +259,7 @@ class DedupClusterSpec extends AnyFunSuite {
       s"sig-level membership $fromSigs must equal pair membership $fromPairs")
     // and on the real sf0.001 corpus through the memoized path
     val d = "/root/testdata/sf0.001"
-    graft.queries.ClusterMemo.clear()
+    graft.queries.Artifacts.clearProducedBy("q50_neardup_clusters")
     val memoPairs = graft.queries.ClusterMemo.simhashPairs(spark, d)
     val pairIds = memoPairs
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))

@@ -154,6 +154,21 @@ class DedupParitySpec extends AnyFunSuite {
     assert(pairs.count() > 0)
   }
 
+  test("NGramJaccard rejects a non-string child at analysis") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    import graft.dedup.NGramJaccard
+    for ((l, r) <- Seq(col("doc_id") -> col("text"),
+        col("text") -> col("doc_id"), split(col("text"), " ") -> col("text"))) {
+      val err = intercept[org.apache.spark.sql.AnalysisException] {
+        docs.select(column(NGramJaccard(expression(l), expression(r), 3)))
+      }
+      assert(err.getMessage.contains("requires two STRING arguments"))
+    }
+    // two strings still analyze and evaluate
+    assert(docs.select(column(NGramJaccard(expression(col("text")),
+      expression(col("text")), 3)).as("j")).filter(col("j") =!= 1.0).isEmpty)
+  }
+
   test("native DotCosine equals the HOF-composed cosine (bit-exact)") {
     import graft.sim.Similarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{FeatureMemo, Tables}
+import graft.queries.{Artifacts, FeatureMemo, Tables}
 import graft.text.TextOps
 
 /** Pins the stored per-doc curation-feature table to the inline
@@ -27,7 +27,7 @@ class FeatureMemoSpec extends AnyFunSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("features == the inline per-doc expressions, column for column") {
-    FeatureMemo.clear()
+    Artifacts.clearProducedBy("q38_text_quality")
     val memo = FeatureMemo.features(spark, d)
       .orderBy(col("doc_id")).collect()
     val inline = Tables.documents(spark, d)
@@ -48,11 +48,11 @@ class FeatureMemoSpec extends AnyFunSuite {
   }
 
   test("memo semantics: one build per session, rebuilt after clear") {
-    FeatureMemo.clear()
+    Artifacts.clearProducedBy("q38_text_quality")
     val a = FeatureMemo.features(spark, d)
     val b = FeatureMemo.features(spark, d)
     assert(a eq b) // cache hit — consumers share ONE pinned plan
-    FeatureMemo.clear()
+    Artifacts.clearProducedBy("q38_text_quality")
     val c = FeatureMemo.features(spark, d)
     assert(!(a eq c)) // Bench's producer clear forces a fresh build
     assert(c.count() == a.count())

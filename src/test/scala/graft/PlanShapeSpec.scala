@@ -275,6 +275,40 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(got.sameElements(ref), "q28 split diverged from countDistinct")
   }
 
+  test("q28 keeps groups whose keys of one branch are all NULL") {
+    // countDistinct reports 0 for such a group (and keeps the NULL flag
+    // as a group); a branch that drops the group must not drop its row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q28").toFile
+    try {
+      val schema = StructType(Seq("l_returnflag" -> StringType,
+        "l_orderkey" -> LongType, "l_partkey" -> LongType,
+        "l_suppkey" -> LongType).map { case (n, t) => StructField(n, t) })
+      val rows = Seq[(String, java.lang.Long, java.lang.Long, java.lang.Long)](
+        ("A", 1L, 10L, 100L), ("A", 2L, 10L, 101L), ("A", 2L, 11L, 101L),
+        ("N", null, 12L, 102L), ("N", null, 13L, null),
+        ("R", 3L, null, null), ("R", 4L, null, 103L),
+        (null, 5L, 14L, 104L))
+        .map { case (f, o, p, s) => org.apache.spark.sql.Row(f, o, p, s) }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+        .write.parquet(s"$tmp/lineitem.parquet")
+      val d0 = tmp.getAbsolutePath
+      val ref = graft.queries.Tables.lineitem(spark, d0)
+        .groupBy(col("l_returnflag"))
+        .agg(countDistinct(col("l_orderkey")).as("n_orders"),
+          countDistinct(col("l_partkey")).as("n_parts"),
+          countDistinct(col("l_suppkey"), col("l_partkey")).as("n_supp_part"))
+        .orderBy(col("l_returnflag"))
+        .collect().map(_.toString)
+      val got = SparkEntry.queries("q28_distinct_counts")(spark, d0)
+        .collect().map(_.toString)
+      assert(ref.length == 4)
+      assert(got.sameElements(ref),
+        s"q28 ${got.mkString(" ")} != countDistinct ${ref.mkString(" ")}")
+    } finally graft.queries.ArtifactStore.deleteTree(tmp)
+  }
+
   test("filter pushdown reaches the parquet scan") {
     val p = planString("q02_filter_project")
     assert(p.contains("PushedFilters") &&

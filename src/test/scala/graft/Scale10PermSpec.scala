@@ -63,7 +63,8 @@ class Scale10PermSpec extends AnyFunSuite {
 
   test("digit family: first 10 copies are rotations, disjoint pairwise") {
     // the cross-copy letter-free-doc artifact (67% of the ×10 pair
-    // table, ProbePairGrowth) needs the SMALL copy counts to be fully
+    // table, ProbePairGrowth at commit c8aa06f) needs the SMALL copy
+    // counts to be fully
     // digit-disjoint; shift-first enumeration gives rotations for
     // k <= 9, which disagree at every digit position
     val maps = (0 to 9).map(digitMap)
