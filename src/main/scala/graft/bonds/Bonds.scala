@@ -17,6 +17,12 @@ import graft.core.{BrCalendar, Num}
   *   - year fractions truncated at 14 decimals
   *   - per-flow PVs rounded (12 dp NTN-B, 9 dp NTN-F)
   *   - prices/quotes truncated at 6 decimals
+  *
+  * Everything in a price that does not depend on the rate (payment dates,
+  * amounts, business-day counts and truncated year fractions) is built once
+  * per call into a [[Cronograma]]; `taxa`, `dv01` and the other multi-rate
+  * functions evaluate that one schedule at every rate, and the root solves
+  * never rebuild it.
   */
 object Bonds {
 
@@ -44,17 +50,26 @@ object Bonds {
       out += d
       d = subtrairMeses(d, intervaloMeses)
     }
-    out.sorted.toSeq
+    out.reverse.toSeq // generated strictly descending
   }
 
-  /** (paymentDate, amount) flows: coupon every semester, principal+coupon
-    * at maturity.
+  /** The semiannual schedule: coupon every semester, principal+coupon at
+    * maturity.
     */
-  def fluxosCaixa(liquidacao: LocalDate, vencimento: LocalDate,
-                  valorCupom: Double, valorFinal: Double): Seq[(LocalDate, Double)] =
-    gerarDatasPagamento(liquidacao, vencimento).map { d =>
-      d -> (if (d == vencimento) valorFinal else valorCupom)
+  private[bonds] def cronograma(liquidacao: LocalDate, vencimento: LocalDate,
+                                valorCupom: Double, valorFinal: Double): Cronograma = {
+    val datas = gerarDatasPagamento(liquidacao, vencimento).toArray
+    val n = datas.length
+    val valores = new Array[Double](n)
+    val anosDu = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      valores(i) = if (datas(i) == vencimento) valorFinal else valorCupom
+      anosDu(i) = BrCalendar.contar(liquidacao, datas(i)) / 252.0
+      i += 1
     }
+    new Cronograma(datas, valores, anosDu)
+  }
 
   // ---------------------------------------------------------- PV and roots
 
@@ -133,9 +148,63 @@ object Bonds {
     }
   }
 
+  /** trunc6(vna6 * trunc6(cot)) for a VNA already truncated at 6 places:
+    * the rate-dependent step of the NTN-B / NTN-C / LFT pu chain.
+    */
+  private[bonds] def puVna6(vna6: Double, cot: Double): Double =
+    Num.truncar(vna6 * Num.truncar(cot, 6), 6)
+
   /** Truncated year fraction trunc14(du/252). */
   def anosTruncados(liq: LocalDate, venc: LocalDate): Double =
     Num.truncar(BrCalendar.contar(liq, venc) / 252.0, 14)
+}
+
+/** One bond's cash-flow schedule from one settlement date, in payment
+  * order: per flow, its date, its amount, the raw du/252 for duration and
+  * trunc14(du/252) for pricing (taken on the first price, so a duration
+  * never pays for it). Nothing in it depends on the rate, so a call builds
+  * it once and evaluates it at as many rates as it needs.
+  */
+private[bonds] final class Cronograma (
+    datas: Array[LocalDate], valores: Array[Double], anosDu: Array[Double]) {
+
+  private lazy val anos: Array[Double] = anosDu.map(Num.truncar(_, 14))
+
+  /** (paymentDate, amount) flows. */
+  def fluxos: Seq[(LocalDate, Double)] = datas.indices.map(i => datas(i) -> valores(i))
+
+  /** trunc6(Σ roundPolars(v/(1+t)^trunc14(du/252), casas)) at the
+    * normalized rate t, summed in payment order; NaN with no flows.
+    */
+  def cotacao(taxa0: Double, casas: Int): Double = {
+    if (datas.isEmpty) return Double.NaN
+    val t = Num.normalizarTaxa(taxa0)
+    val a = anos
+    var soma = 0.0
+    var i = 0
+    while (i < a.length) {
+      soma += Num.roundPolars(valores(i) / math.pow(1 + t, a(i)), casas)
+      i += 1
+    }
+    Num.truncar(soma, 6)
+  }
+
+  /** Raw Macaulay duration on du/252 at the rate as given; NaN with no
+    * flows.
+    */
+  def duration(taxa: Double): Double = {
+    if (datas.isEmpty) return Double.NaN
+    var somaVp = 0.0
+    var somaVpAnos = 0.0
+    var i = 0
+    while (i < anosDu.length) {
+      val vp = valores(i) / math.pow(1 + taxa, anosDu(i))
+      somaVp += vp
+      somaVpAnos += vp * anosDu(i)
+      i += 1
+    }
+    somaVpAnos / somaVp
+  }
 }
 
 /** LTN: zero-coupon, face 1000 (reference ltn.py). */
@@ -177,46 +246,35 @@ object NtnF {
   val ValorCupom = 48.80885       // round(1000*((1.10)^0.5 - 1), 5)
   val ValorFinal = 1048.80885
 
+  private def cronograma(liq: LocalDate, venc: LocalDate): Cronograma =
+    Bonds.cronograma(liq, venc, ValorCupom, ValorFinal)
+
   def fluxosCaixa(liq: LocalDate, venc: LocalDate): Seq[(LocalDate, Double)] =
-    Bonds.fluxosCaixa(liq, venc, ValorCupom, ValorFinal)
+    cronograma(liq, venc).fluxos
 
   /** PU: per-flow PV rounded 9dp, sum truncated 6dp; ntnf.py:285-339. */
-  def pu(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val t = Num.normalizarTaxa(taxa0)
-    val fluxos = fluxosCaixa(liq, venc)
-    if (fluxos.isEmpty) return Double.NaN
-    val soma = fluxos.map { case (d, v) =>
-      val anos = Bonds.anosTruncados(liq, d)
-      Num.roundPolars(v / math.pow(1 + t, anos), 9)
-    }.sum
-    Num.truncar(soma, 6)
-  }
+  def pu(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
+    cronograma(liq, venc).cotacao(taxa0, 9)
 
   /** TIR via bracket+bisection, truncated 8dp; ntnf.py:979-1018. */
   def taxa(liq: LocalDate, venc: LocalDate, pu0: Double): Double = {
     if (pu0 <= 0) return Double.NaN
-    Num.truncar(Bonds.encontrarRaiz(t => pu(liq, venc, t) - pu0), 8)
+    val c = cronograma(liq, venc)
+    Num.truncar(Bonds.encontrarRaiz(t => c.cotacao(t, 9) - pu0), 8)
   }
 
   /** Macaulay duration — returned RAW (ntnf.py:867 has no truncar,
     * unlike NTN-B's trunc14 at ntnb.py:747).
     */
-  def duration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val fluxos = fluxosCaixa(liq, venc)
-    if (fluxos.isEmpty) return Double.NaN
-    val termos = fluxos.map { case (d, v) =>
-      val anos = BrCalendar.contar(liq, d) / 252.0
-      val vp = v / math.pow(1 + taxa0, anos)
-      (vp, vp * anos)
-    }
-    termos.map(_._2).sum / termos.map(_._1).sum
-  }
+  def duration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
+    cronograma(liq, venc).duration(taxa0)
 
   def dv01(liq: LocalDate, venc: LocalDate, taxa0: Double, pu0: Double): Double = {
     val t = Num.normalizarTaxa(taxa0)
     val t1 = Num.roundHalfEven(t + 0.0001, 8)
-    val p1 = pu(liq, venc, t)
-    val p2 = pu(liq, venc, t1)
+    val c = cronograma(liq, venc)
+    val p1 = c.cotacao(t, 9)
+    val p2 = c.cotacao(t1, 9)
     pu0 * (1 - p2 / p1)
   }
 }
@@ -228,52 +286,44 @@ object NtnB {
   val ValorCupom = 0.02956301     // round((1.06)^0.5 - 1, 8)
   val ValorFinal = 1.02956301
 
+  private def cronograma(liq: LocalDate, venc: LocalDate): Cronograma =
+    Bonds.cronograma(liq, venc, ValorCupom, ValorFinal)
+
   def fluxosCaixa(liq: LocalDate, venc: LocalDate): Seq[(LocalDate, Double)] =
-    Bonds.fluxosCaixa(liq, venc, ValorCupom, ValorFinal)
+    cronograma(liq, venc).fluxos
 
   /** Quotation factor: per-flow PV rounded 12dp, sum truncated 6dp;
     * goldens ntnb.py:285-296.
     */
-  def cotacao(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val t = Num.normalizarTaxa(taxa0)
-    val fluxos = fluxosCaixa(liq, venc)
-    if (fluxos.isEmpty) return Double.NaN
-    val soma = fluxos.map { case (d, v) =>
-      val anos = Bonds.anosTruncados(liq, d)
-      Num.roundPolars(v / math.pow(1 + t, anos), 12)
-    }.sum
-    Num.truncar(soma, 6)
-  }
+  def cotacao(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
+    cronograma(liq, venc).cotacao(taxa0, 12)
 
   /** PU = trunc6(trunc6(vna) * trunc6(cot)); ntnb.py:317-355. */
   def pu(vna: Double, cot: Double): Double =
-    Num.truncar(Num.truncar(vna, 6) * Num.truncar(cot, 6), 6)
+    Bonds.puVna6(Num.truncar(vna, 6), cot)
 
-  /** TIR via root find on the pu chain; ntnb.py:860-904. */
+  /** TIR via root find on the pu chain; ntnb.py:860-904. trunc6(vna) is
+    * rate-independent and taken once.
+    */
   def taxa(liq: LocalDate, venc: LocalDate, vna: Double, pu0: Double): Double = {
     if (pu0 <= 0) return Double.NaN
+    val c = cronograma(liq, venc)
+    val vna6 = Num.truncar(vna, 6)
     Num.truncar(
-      Bonds.encontrarRaiz(t => pu(vna, cotacao(liq, venc, t)) - pu0), 8)
+      Bonds.encontrarRaiz(t => Bonds.puVna6(vna6, c.cotacao(t, 12)) - pu0), 8)
   }
 
   /** Macaulay duration, trunc14; golden ntnb.py:704-735. */
-  def duration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val fluxos = fluxosCaixa(liq, venc)
-    if (fluxos.isEmpty) return Double.NaN
-    val termos = fluxos.map { case (d, v) =>
-      val anos = BrCalendar.contar(liq, d) / 252.0
-      val vp = v / math.pow(1 + taxa0, anos)
-      (vp, vp * anos)
-    }
-    Num.truncar(termos.map(_._2).sum / termos.map(_._1).sum, 14)
-  }
+  def duration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
+    Num.truncar(cronograma(liq, venc).duration(taxa0), 14)
 
   /** DV01 via 1bp quotation reprice; golden ntnb.py:785-812. */
   def dv01(liq: LocalDate, venc: LocalDate, taxa0: Double, pu0: Double): Double = {
     val t = Num.normalizarTaxa(taxa0)
     val t1 = Num.roundHalfEven(t + 0.0001, 8)
-    val c1 = cotacao(liq, venc, t)
-    val c2 = cotacao(liq, venc, t1)
+    val c = cronograma(liq, venc)
+    val c1 = c.cotacao(t, 12)
+    val c2 = c.cotacao(t1, 12)
     pu0 * (1 - c2 / c1)
   }
 }
@@ -292,15 +342,8 @@ object NtnC {
     else (ValorCupom, ValorFinal)
 
   def cotacao(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val t = Num.normalizarTaxa(taxa0)
     val (vc, vf) = cupons(venc)
-    val fluxos = Bonds.fluxosCaixa(liq, venc, vc, vf)
-    if (fluxos.isEmpty) return Double.NaN
-    val soma = fluxos.map { case (d, v) =>
-      val anos = Bonds.anosTruncados(liq, d)
-      Num.roundPolars(v / math.pow(1 + t, anos), 12)
-    }.sum
-    Num.truncar(soma, 6)
+    Bonds.cronograma(liq, venc, vc, vf).cotacao(taxa0, 12)
   }
 
   def pu(vna: Double, cot: Double): Double = NtnB.pu(vna, cot)
@@ -321,19 +364,23 @@ object Lft {
     (fatorLft * fatorDi - 1) / (fatorDi - 1)
   }
   /** cotacao = trunc6(1/(1+r)^trunc14(du/252)); goldens lft.py:131-147. */
-  def cotacao(liq: LocalDate, venc: LocalDate, taxa0: Double): Double = {
-    val t = Num.normalizarTaxa(taxa0)
-    val anos = Bonds.anosTruncados(liq, venc)
-    Num.truncar(1 / math.pow(1 + t, anos), 6)
-  }
+  def cotacao(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
+    cotacao(Bonds.anosTruncados(liq, venc), taxa0)
 
-  def pu(vna: Double, cot: Double): Double =
-    Num.truncar(Num.truncar(vna, 6) * Num.truncar(cot, 6), 6)
+  /** The single flow's schedule is its year fraction `anos`. */
+  private def cotacao(anos: Double, taxa0: Double): Double =
+    Num.truncar(1 / math.pow(1 + Num.normalizarTaxa(taxa0), anos), 6)
 
-  /** Implied rate via root find; goldens lft.py:187-194. */
+  def pu(vna: Double, cot: Double): Double = NtnB.pu(vna, cot)
+
+  /** Implied rate via root find; goldens lft.py:187-194. The year
+    * fraction and trunc6(vna) are rate-independent and taken once.
+    */
   def taxa(liq: LocalDate, venc: LocalDate, vna: Double, pu0: Double): Double = {
     if (pu0 <= 0) return Double.NaN
+    val anos = Bonds.anosTruncados(liq, venc)
+    val vna6 = Num.truncar(vna, 6)
     Num.truncar(
-      Bonds.encontrarRaiz(t => pu(vna, cotacao(liq, venc, t)) - pu0), 8)
+      Bonds.encontrarRaiz(t => Bonds.puVna6(vna6, cotacao(anos, t)) - pu0), 8)
   }
 }

@@ -1,7 +1,7 @@
 package graft.bonds
 
 import java.time.LocalDate
-import graft.core.BrCalendar
+import graft.core.{BrCalendar, Num}
 import graft.curve.Interpolador
 
 /** Sequential zero-curve bootstraps (D5/D6; reference
@@ -29,34 +29,44 @@ object Bootstrap {
       vencs.map(v => BrCalendar.contar(liq, v)),
       ordered.map(_._2), "flat_forward")
 
-    val grid = Bonds.gerarDatasPagamento(liq, vencs.last, intervaloMeses = 3)
+    // The semiannual payment dates of grid(i) are grid(i-2), grid(i-4), ...
+    // (subtrairMeses keeps the day), so every schedule below reads the
+    // grid by index.
+    val grid = Bonds.gerarDatasPagamento(liq, vencs.last, intervaloMeses = 3).toArray
+    val n = grid.length
     val dias = grid.map(d => BrCalendar.contar(liq, d))
     val anos = dias.map(_ / 252.0)
-    val tir = dias.map(interp(_))
-    val zeros = scala.collection.mutable.LinkedHashMap[LocalDate, Double]()
-    val anosPorData = grid.zip(anos).toMap
+    val anosTrunc = anos.map(Num.truncar(_, 14))
+    val zeros = new Array[Double](n)
 
     val primeiro = vencs.head
-    grid.indices.foreach { i =>
-      val venc = grid(i)
-      if (!venc.isAfter(primeiro)) {
-        zeros(venc) = tir(i)
+    var i = 0
+    while (i < n) {
+      val tir = interp(dias(i))
+      if (!grid(i).isAfter(primeiro)) {
+        zeros(i) = tir
       } else {
         // PV of the SEMIANNUAL coupons before this maturity, discounted at
-        // the zero rates already solved on the grid.
-        val fluxosAnteriores = Bonds
-          .gerarDatasPagamento(liq, venc, intervaloMeses = 6).dropRight(1)
-        val pvCupons = Bonds.calcularPv(
-          fluxosAnteriores.map(_ => NtnB.ValorCupom),
-          fluxosAnteriores.map(zeros(_)),
-          fluxosAnteriores.map(anosPorData(_)))
-        val preco = NtnB.cotacao(liq, venc, tir(i))
+        // the zero rates already solved on the grid; then the synthetic
+        // NTN-B's cotacao over the same dates plus its maturity.
+        var pvCupons = 0.0
+        var soma = 0.0
+        val t = Num.normalizarTaxa(tir)
+        var j = i % 2
+        while (j < i) {
+          pvCupons += NtnB.ValorCupom / math.pow(1 + zeros(j), anos(j))
+          soma += Num.roundPolars(NtnB.ValorCupom / math.pow(1 + t, anosTrunc(j)), 12)
+          j += 2
+        }
+        soma += Num.roundPolars(NtnB.ValorFinal / math.pow(1 + t, anosTrunc(i)), 12)
+        val preco = Num.truncar(soma, 6)
         val fator = NtnB.ValorFinal / (preco - pvCupons)
-        zeros(venc) = math.pow(fator, 1 / anos(i)) - 1
+        zeros(i) = math.pow(fator, 1 / anos(i)) - 1
       }
+      i += 1
     }
 
-    val all = grid.indices.map(i => ZeroVertex(grid(i), dias(i), zeros(grid(i))))
+    val all = grid.indices.map(i => ZeroVertex(grid(i), dias(i), zeros(i)))
     if (incluirCupons) all else all.filter(v => vencs.contains(v.dataVencimento))
   }
 

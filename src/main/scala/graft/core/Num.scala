@@ -12,9 +12,48 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
   */
 object Num {
 
+  /** Exact powers of ten, 10^0 .. 10^15 (each below 2^53). */
+  private val Pow10: Array[Double] = Array(
+    1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6, 1e7,
+    1e8, 1e9, 1e10, 1e11, 1e12, 1e13, 1e14, 1e15)
+
+  /** Truncation toward zero at `decimals` places of the decimal string
+    * `Double.toString(x)`; NaN and infinities pass through.
+    *
+    * The result always equals
+    * `BigDecimal.valueOf(x).setScale(decimals, DOWN).doubleValue()`. When
+    * `0 <= decimals <= 15` a double-only path computes it, and it is exact:
+    *   - Let X = |x|, P = 10^decimals (exact), S the decimal value of
+    *     `Double.toString(X)` and y = fl(X·P). S rounds back to X, so
+    *     |S - X| <= ulp(X)/2, hence |S·P - X·P| <= P·ulp(X)/2 < ulp(y)
+    *     (P·ulp(X) < 2·ulp(X·P) for normal X); and |y - X·P| <= ulp(y)/2.
+    *     So |S·P - y| < 1.5·ulp(y). For subnormal X both S·P and y are far
+    *     below 1, and k = 0 below.
+    *   - The BigDecimal path returns k'/P rounded once to a double, with
+    *     k' = floor(S·P). If y < 2^52 and y's fractional part is at least
+    *     2·ulp(y) from both 0 and 1, no integer lies between S·P and y, so
+    *     k' = k = floor(y), an exact integer below 2^52.
+    *   - k and P are exact doubles, so k / P is the correctly rounded
+    *     quotient, the same double BigDecimal's `doubleValue` gives for
+    *     k'/P. The sign is applied after (rounding is symmetric), except
+    *     that a zero result is +0.0, as BigDecimal has no negative zero.
+    * Inputs outside those bounds (integral or near-integral y, y >= 2^52,
+    * zero, `decimals` outside 0..15) take the BigDecimal path only.
+    */
   def truncar(x: Double, decimals: Int): Double = {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return x
-    // JBigDecimal.valueOf goes through Double.toString (shortest repr).
+    if (decimals >= 0 && decimals <= 15) {
+      val p = Pow10(decimals)
+      val y = math.abs(x) * p
+      if (y < 4503599627370496.0) { // 2^52
+        val k = math.floor(y)
+        val frac = y - k // exact: k <= y < 2k, or k = 0
+        val margem = 2 * math.ulp(y)
+        if (frac >= margem && frac <= 1 - margem)
+          return if (k == 0) 0.0 else if (x < 0) -(k / p) else k / p
+      }
+    }
+    // JBigDecimal.valueOf goes through Double.toString.
     JBigDecimal.valueOf(x).setScale(decimals, RoundingMode.DOWN).doubleValue()
   }
 
@@ -38,7 +77,8 @@ object Num {
     */
   def roundPolars(x: Double, decimals: Int): Double = {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return x
-    val p = math.pow(10.0, decimals)
+    val p = if (decimals >= 0 && decimals <= 15) Pow10(decimals)
+            else math.pow(10.0, decimals)
     Math.rint(x * p) / p
   }
 

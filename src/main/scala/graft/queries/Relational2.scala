@@ -89,7 +89,9 @@ object Relational2 {
     SELECT l_returnflag,
            count(DISTINCT l_orderkey) AS n_orders,
            count(DISTINCT l_partkey) AS n_parts,
-           count(DISTINCT (l_suppkey, l_partkey)) AS n_supp_part
+           count(DISTINCT CASE WHEN l_suppkey IS NOT NULL
+                                AND l_partkey IS NOT NULL
+                               THEN (l_suppkey, l_partkey) END) AS n_supp_part
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
 
   // q29 — salted aggregation over the (skewed in real data) order-status

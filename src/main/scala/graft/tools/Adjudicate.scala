@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.{Bench, SparkEntry, Verify}
+import scala.util.control.NonFatal
 
 /** Automates REPRO.md's adjudication recipe (judge directive r9-#1,
   * "make the bench artifact self-evidencing"): diff a close-run board
@@ -85,7 +86,9 @@ object Adjudicate {
     // record) — the convergence annotation below flags that state.
     SparkEntry.queries.get("q50_neardup_clusters").foreach { fn =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[adjudicate] warmup q50_neardup_clusters failed: $e")
+      }
     }
 
     def num(v: Double): String =
@@ -97,7 +100,9 @@ object Adjudicate {
       // subsidize this one: start from empty memos, like a fresh JVM
       graft.queries.Artifacts.clearAll()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[adjudicate] warmup $name failed: $e")
+      }
       // a FAILED repeat must not contribute its (near-zero) elapsed time
       // as a sample — a query BROKEN by a code change would otherwise
       // adjudicate as "jitter", writing exoneration into the evidence

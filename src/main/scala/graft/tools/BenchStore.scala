@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.{SparkEntry, Verify}
 import graft.queries.{ArtifactStore, Artifacts}
+import scala.util.control.NonFatal
 
 /** The artifact store's measured economics (judge directive r9-#3):
   * the store had plan-shape proof (cold sessions read parquet, zero
@@ -73,7 +74,9 @@ object BenchStore {
 
     // codegen/JIT warmup outside any timed mode (REPRO.md protocol)
     Artifacts.clearAll()
-    Queries.foreach(q => try runOnce(q) catch { case _: Throwable => })
+    Queries.foreach(q => try runOnce(q) catch { case NonFatal(e) =>
+      System.err.println(s"[bench-store] warmup $q failed: $e")
+    })
 
     def phase(mode: String): Seq[(String, Seq[Double])] = Queries.map { q =>
       val times = (1 to repeats).map { r =>

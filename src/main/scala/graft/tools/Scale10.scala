@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, Verify}
+import scala.util.control.NonFatal
 
 /** One measured 10× scale point for the heavy tail (judge directive
   * r9-#5): ScaleSpec plants adversarial STRUCTURES, but no board query
@@ -236,7 +237,9 @@ object Scale10 {
     }
 
     // warmup (codegen/JIT) on the small side
-    queries.foreach(q => try runOnce(q, src) catch { case _: Throwable => })
+    queries.foreach(q => try runOnce(q, src) catch { case NonFatal(e) =>
+      System.err.println(s"[scale10] warmup $q failed: $e")
+    })
 
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.{SparkEntry, Verify}
+import scala.util.control.NonFatal
 
 /** Four-rung scale ladder (×1/×10/×30/×100) with a model fit — the
   * follow-through on the r9-#5 decade question.
@@ -115,7 +116,9 @@ object ScaleLadder {
     }
 
     // codegen/JIT warmup on the small side only
-    queries.foreach(q => try runOnce(q, src) catch { case _: Throwable => })
+    queries.foreach(q => try runOnce(q, src) catch { case NonFatal(e) =>
+      System.err.println(s"[ladder] warmup $q failed: $e")
+    })
 
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -107,6 +107,36 @@ class BondsSpec extends AnyFunSuite {
     assert(NtnC.pu(6598.913723, 1.264958) == 8347.348705)
   }
 
+  // Values computed by the schedule-per-evaluation implementation that
+  // preceded the once-per-call schedules; they pin that rewrite.
+  test("NTN-C cotacao, LFT taxa and NTN-F/NTN-B dv01 pinned values") {
+    assert(NtnC.cotacao(d("2024-06-03"), d("2031-01-01"), 0.0712) == 1.29327)
+    assert(NtnC.cotacao(d("2019-05-02"), d("2021-04-01"), 0.041) == 1.038713)
+    assert(NtnC.cotacao(d("2010-03-15"), d("2017-07-01"), 0.0585) == 1.020929)
+    assert(Lft.taxa(d("2025-01-10"), d("2029-03-01"), 15900.123456, 15870.5)
+      == 0.00045456)
+    assert(Lft.taxa(d("2019-09-02"), d("2020-03-01"), 10250.654321, 10251.2)
+      == -0.00010886)
+    assert(Lft.taxa(d("2012-02-14"), d("2017-03-07"), 5120.5, 5100.987654)
+      == 0.00075713)
+    val f1 = NtnF.pu(d("2024-07-05"), d("2035-01-01"), 0.11921)
+    assert(NtnF.dv01(d("2024-07-05"), d("2035-01-01"), 0.11921, f1)
+      == 0.5215720000000301)
+    val f2 = NtnF.pu(d("2010-02-01"), d("2013-01-01"), 0.1184)
+    assert(f2 == 966.47574)
+    assert(NtnF.dv01(d("2010-02-01"), d("2013-01-01"), 0.1184, f2)
+      == 0.2222869999999458)
+    val b1 = NtnB.pu(4299.160173,
+      NtnB.cotacao(d("2024-05-31"), d("2035-05-15"), 0.061490))
+    assert(NtnB.dv01(d("2024-05-31"), d("2035-05-15"), 0.061490, b1)
+      == 3.2759600517786427)
+    val b2 = NtnB.pu(2510.5,
+      NtnB.cotacao(d("2014-10-20"), d("2024-08-15"), 0.0611))
+    assert(b2 == 2521.99809)
+    assert(NtnB.dv01(d("2014-10-20"), d("2024-08-15"), 0.0611, b2)
+      == 1.7749234999999544)
+  }
+
   test("LFT rentabilidade golden (lft.py:220-225)") {
     assert(Lft.rentabilidade(0.001124, 0.13967670224373396)
       == 1.008594331960501)
