@@ -36,38 +36,47 @@ object Bootstrap {
     val n = grid.length
     val dias = grid.map(d => BrCalendar.contar(liq, d))
     val anos = dias.map(_ / 252.0)
-    val anosTrunc = anos.map(Num.truncar(_, 14))
+    val anosTrunc = dias.map(Bonds.anosTruncados)
     val zeros = new Array[Double](n)
+    // PV of grid(i)'s semiannual coupons before it, at the zero rates
+    // already solved: the same-parity sum of the earlier points, left to right
+    val pvCupons = new Array[Double](n)
 
     val primeiro = vencs.head
     var i = 0
     while (i < n) {
+      if (i >= 2)
+        pvCupons(i) = pvCupons(i - 2) + NtnB.ValorCupom / math.pow(1 + zeros(i - 2), anos(i - 2))
       val tir = interp(dias(i))
-      if (!grid(i).isAfter(primeiro)) {
-        zeros(i) = tir
-      } else {
-        // PV of the SEMIANNUAL coupons before this maturity, discounted at
-        // the zero rates already solved on the grid; then the synthetic
-        // NTN-B's cotacao over the same dates plus its maturity.
-        var pvCupons = 0.0
-        var soma = 0.0
-        val t = Num.normalizarTaxa(tir)
-        var j = i % 2
-        while (j < i) {
-          pvCupons += NtnB.ValorCupom / math.pow(1 + zeros(j), anos(j))
-          soma += Num.roundPolars(NtnB.ValorCupom / math.pow(1 + t, anosTrunc(j)), 12)
-          j += 2
+      zeros(i) =
+        if (!grid(i).isAfter(primeiro)) tir
+        else {
+          val preco = cotacaoGrade(anosTrunc, i, 2, tir, NtnB.ValorCupom, NtnB.ValorFinal, 12)
+          math.pow(NtnB.ValorFinal / (preco - pvCupons(i)), 1 / anos(i)) - 1
         }
-        soma += Num.roundPolars(NtnB.ValorFinal / math.pow(1 + t, anosTrunc(i)), 12)
-        val preco = Num.truncar(soma, 6)
-        val fator = NtnB.ValorFinal / (preco - pvCupons)
-        zeros(i) = math.pow(fator, 1 / anos(i)) - 1
-      }
       i += 1
     }
 
     val all = grid.indices.map(i => ZeroVertex(grid(i), dias(i), zeros(i)))
     if (incluirCupons) all else all.filter(v => vencs.contains(v.dataVencimento))
+  }
+
+  /** cotacao of the synthetic bond maturing at grid point i that pays
+    * `cupom` at points i - passo, i - 2·passo, ... down to 0 and
+    * `valorFinal` at i: trunc6(Σ roundPolars(v/(1+t)^anosTrunc(j), casas))
+    * at the normalized rate t, summed in payment order.
+    */
+  private def cotacaoGrade(anosTrunc: Array[Double], i: Int, passo: Int, taxa: Double,
+                           cupom: Double, valorFinal: Double, casas: Int): Double = {
+    val t = Num.normalizarTaxa(taxa)
+    var soma = 0.0
+    var j = i % passo
+    while (j < i) {
+      soma += Num.roundPolars(cupom / math.pow(1 + t, anosTrunc(j)), casas)
+      j += passo
+    }
+    soma += Num.roundPolars(valorFinal / math.pow(1 + t, anosTrunc(i)), casas)
+    Num.truncar(soma, 6)
   }
 
   /** PRE zero curve: LTN rates are zero by construction; after the last
@@ -90,36 +99,35 @@ object Bootstrap {
 
     // Every semiannual payment date to the last NTN-F maturity is a grid
     // point; each one past the LTN range is solved as a SYNTHETIC NTN-F
-    // with its interpolated IRR (ntnf.py:440-505).
-    val grid = Bonds.gerarDatasPagamento(liq, ultimoNtnf, intervaloMeses = 6)
-    val spot = scala.collection.mutable.LinkedHashMap[LocalDate, Double]()
+    // with its interpolated IRR (ntnf.py:440-505), whose coupons fall on
+    // the earlier grid points.
+    val grid = Bonds.gerarDatasPagamento(liq, ultimoNtnf, intervaloMeses = 6).toArray
+    val n = grid.length
+    val dias = grid.map(d => BrCalendar.contar(liq, d))
+    val anos = dias.map(_ / 252.0)
+    val anosTrunc = dias.map(Bonds.anosTruncados)
+    val spot = new Array[Double](n)
+    // PV of the coupons before grid(i) at the spot rates already solved
+    val pvCupons = new Array[Double](n)
 
-    grid.foreach { venc =>
-      val du = BrCalendar.contar(liq, venc)
-      if (!venc.isAfter(ultimoLtn)) {
-        spot(venc) = interpLtn(du)
-      } else {
-        val tir = interpNtnf(du)
-        val datasFluxo = Bonds.gerarDatasPagamento(liq, venc, 6).dropRight(1)
-        if (datasFluxo.isEmpty) {
-          // reference guard (ntnf.py:486-492): no prior coupons -> null
-          // vertex (NaN here), cascading into later bonds' PV sums
-          spot(venc) = Double.NaN
-        } else {
-          val pvCupons = Bonds.calcularPv(
-            datasFluxo.map(_ => NtnF.ValorCupom),
-            datasFluxo.map(spot(_)),
-            datasFluxo.map(d => BrCalendar.contar(liq, d) / 252.0))
-          val preco = NtnF.pu(liq, venc, tir)
-          val fator = NtnF.ValorFinal / (preco - pvCupons)
-          spot(venc) = math.pow(fator, 1 / (du / 252.0)) - 1
+    var i = 0
+    while (i < n) {
+      if (i >= 1)
+        pvCupons(i) = pvCupons(i - 1) + NtnF.ValorCupom / math.pow(1 + spot(i - 1), anos(i - 1))
+      spot(i) =
+        if (!grid(i).isAfter(ultimoLtn)) interpLtn(dias(i))
+        // reference guard (ntnf.py:486-492): no prior coupons -> null
+        // vertex (NaN here), cascading into later bonds' PV sums
+        else if (i == 0) Double.NaN
+        else {
+          val preco = cotacaoGrade(anosTrunc, i, 1, interpNtnf(dias(i)),
+            NtnF.ValorCupom, NtnF.ValorFinal, 9)
+          math.pow(NtnF.ValorFinal / (preco - pvCupons(i)), 1 / anos(i)) - 1
         }
-      }
+      i += 1
     }
 
-    val all = grid.map { v =>
-      ZeroVertex(v, BrCalendar.contar(liq, v), spot(v))
-    }
+    val all = grid.indices.map(i => ZeroVertex(grid(i), dias(i), spot(i)))
     if (incluirCupons) all
     else all.filter(v => vencimentosNtnf.contains(v.dataVencimento))
   }

@@ -20,6 +20,14 @@ import java.util.Arrays
   *     next/previous business day, then step n business days.
   *   - Weekends are never business days in either regime.
   *
+  * `contar` is O(1): object initialisation builds, per regime, one
+  * cumulative business-day `Array[Int]` over the holiday lists' span
+  * [1990-01-01, 2100-01-01) (40,177 days each, 320 KB for both). With
+  * cum(d) the regime's business days in [1990-01-01, d),
+  * `contar(s, e) = cum(e) - cum(s)` under the regime of `s`, for every
+  * (s, e) including s > e. Neither list has a holiday outside the span
+  * (checked at load), so cum extends past both ends by weekday arithmetic.
+  *
   * All hot-path methods operate on epoch-day Ints (Spark's internal DateType
   * representation) so Catalyst expressions can call them directly from
   * generated code. Holiday lists ship as classpath resources (public ANBIMA
@@ -50,12 +58,6 @@ object BrCalendar {
   val holidaysOld: Array[Int] = loadHolidays("/graft/feriados_antigos_br.txt")
   val holidaysNew: Array[Int] = loadHolidays("/graft/feriados_novos_br.txt")
 
-  /** Weekday-only holiday lists: for business-day counting, holidays on
-    * weekends must not be double-subtracted.
-    */
-  private val weekdayHolidaysOld: Array[Int] = holidaysOld.filter(isWeekday)
-  private val weekdayHolidaysNew: Array[Int] = holidaysNew.filter(isWeekday)
-
   /** 0=Mon .. 6=Sun. Epoch day 0 (1970-01-01) was a Thursday. */
   @inline def dayOfWeek(epochDay: Int): Int = Math.floorMod(epochDay + 3, 7)
 
@@ -65,36 +67,44 @@ object BrCalendar {
   @inline def regimeHolidays(anchorEpochDay: Int): Array[Int] =
     if (anchorEpochDay < TransitionEpochDay) holidaysOld else holidaysNew
 
-  @inline private def regimeWeekdayHolidays(anchor: Int): Array[Int] =
-    if (anchor < TransitionEpochDay) weekdayHolidaysOld else weekdayHolidaysNew
+  /** Span of the cumulative tables, [1990-01-01, 2100-01-01): every
+    * holiday of both lists falls inside it.
+    */
+  val InicioTabela: Int = LocalDate.of(1990, 1, 1).toEpochDay.toInt
+  val FimTabela: Int = LocalDate.of(2100, 1, 1).toEpochDay.toInt
+  require(Seq(holidaysOld, holidaysNew).forall(h =>
+    h.head >= InicioTabela && h.last < FimTabela),
+    "holiday list outside the cumulative table's span")
 
-  /** Count of weekdays in [start, end); requires start <= end. */
-  private def weekdaysIn(start: Int, end: Int): Int = {
-    val n = end - start
-    if (n <= 0) return 0
-    var count = (n / 7) * 5
-    var d = start + (n / 7) * 7
-    while (d < end) {
-      if (isWeekday(d)) count += 1
-      d += 1
+  /** Weekdays in [-3, d): epoch day -3 (1969-12-29) was a Monday. */
+  @inline private def semana(d: Long): Long =
+    5 * Math.floorDiv(d + 3, 7L) + math.min(Math.floorMod(d + 3, 7L), 5L)
+
+  /** Business days of one regime in [InicioTabela, InicioTabela + i), for
+    * i in 0..FimTabela - InicioTabela.
+    */
+  private def acumulados(hol: Array[Int]): Array[Int] = {
+    val t = new Array[Int](FimTabela - InicioTabela + 1)
+    var i = 0
+    while (i < t.length - 1) {
+      t(i + 1) = t(i) + (if (isBdayUnder(InicioTabela + i, hol)) 1 else 0)
+      i += 1
     }
-    count
+    t
   }
 
-  /** Number of values in sorted `arr` that fall in [lo, hi). */
-  private def countInRange(arr: Array[Int], lo: Int, hi: Int): Int = {
-    if (hi <= lo) return 0
-    lowerBound(arr, hi) - lowerBound(arr, lo)
-  }
+  private val acumuladosOld: Array[Int] = acumulados(holidaysOld)
+  private val acumuladosNew: Array[Int] = acumulados(holidaysNew)
 
-  /** Index of first element >= key in sorted arr. */
-  private def lowerBound(arr: Array[Int], key: Int): Int = {
-    val i = Arrays.binarySearch(arr, key)
-    if (i >= 0) {
-      // binarySearch gives an arbitrary match; holiday lists are unique so
-      // the hit is exact.
-      i
-    } else -(i + 1)
+  /** Business days in [InicioTabela, d) under the table's regime, negative
+    * before InicioTabela. Outside the span no holiday exists, so the count
+    * extends past both ends by weekdays.
+    */
+  @inline private def acumulado(t: Array[Int], d: Long): Long = {
+    val i = d - InicioTabela
+    if (i < 0) semana(d) - semana(InicioTabela)
+    else if (i >= t.length) t(t.length - 1) + semana(d) - semana(FimTabela)
+    else t(i.toInt)
   }
 
   /** Business days in [start, end); negative when start > end.
@@ -102,13 +112,8 @@ object BrCalendar {
     * reference's per-row `_expressao_feriados`.
     */
   def contar(startEpochDay: Int, endEpochDay: Int): Long = {
-    val hol = regimeWeekdayHolidays(startEpochDay)
-    if (startEpochDay <= endEpochDay)
-      (weekdaysIn(startEpochDay, endEpochDay)
-        - countInRange(hol, startEpochDay, endEpochDay)).toLong
-    else
-      -(weekdaysIn(endEpochDay, startEpochDay)
-        - countInRange(hol, endEpochDay, startEpochDay)).toLong
+    val t = if (startEpochDay < TransitionEpochDay) acumuladosOld else acumuladosNew
+    acumulado(t, endEpochDay) - acumulado(t, startEpochDay)
   }
 
   def contar(start: LocalDate, end: LocalDate): Long =

@@ -8,11 +8,13 @@ import graft.bonds._
 import graft.core.BrCalendar
 import graft.curve.Interpolador
 
-/** The bond functions that build their schedule once per call must return
-  * the same doubles, bit for bit, as the schedule-per-evaluation formulas
-  * they replaced. [[ScheduleIdentitySpec.Referencia]] keeps those formulas
-  * (with the BigDecimal-only truncation and `math.pow` rounding scale) as
-  * the reference implementation.
+/** The bond functions that build their schedule once per call and solve
+  * rates behind a sign oracle must return the same doubles, bit for bit, as
+  * the schedule-per-evaluation formulas they replaced.
+  * [[ScheduleIdentitySpec.Referencia]] keeps those formulas as the reference
+  * implementation, with its own BigDecimal-only truncation, `math.pow`
+  * rounding scale, bisection that evaluates every point and business-day
+  * count (weekdays minus binary-searched holidays).
   */
 class ScheduleIdentitySpec extends AnyFunSuite {
   import ScheduleIdentitySpec._
@@ -96,6 +98,91 @@ class ScheduleIdentitySpec extends AnyFunSuite {
     cmp.check(Seeds.length * Dias * 2L)
   }
 
+  test("rate solves are bit-identical on adversarial inputs") {
+    val cmp = new Comparador
+    val eps = Seq(-0.999, -0.95, -0.5, 1.2, 3.0, 9.99)
+    for (dia <- portfolio(Seeds.head).take(Adversos)) {
+      val liq = dia.liq
+      // schedules with no flow and with one flow, besides the day's own
+      val curtos = Seq(liq.minusDays(10), liq.plusDays(40), liq.plusMonths(5))
+      def pus(pu: Double, preco: Double => Double): Seq[Double] =
+        Seq(pu, pu + 3e-7, pu * (1 + 1e-9), Math.nextUp(pu), 1e-3, 1.0, 1e12, 1e300,
+          Double.NaN, Double.MinPositiveValue, 1e-310, java.lang.Double.MIN_NORMAL,
+          Double.PositiveInfinity) ++ eps.map(preco)
+      for (i <- dia.instrumentos; venc <- i.venc +: curtos) {
+        val tag = s"${i.tipo} $liq..$venc"
+        i.tipo match {
+          case "NTN-F" =>
+            for (pu0 <- pus(NtnF.pu(liq, venc, i.taxa), t => Referencia.ntnfPu(liq, venc, t)))
+              cmp(s"$tag pu0 $pu0", NtnF.taxa(liq, venc, pu0), Referencia.ntnfTaxa(liq, venc, pu0))
+          case "NTN-B" =>
+            for (vna <- Seq(i.vna, 0.0, -1000.0, 4e-7);
+                 pu0 <- pus(Referencia.ntnbPu(i.vna, Referencia.ntnbCotacao(liq, venc, i.taxa)),
+                   t => Referencia.ntnbPu(i.vna, Referencia.ntnbCotacao(liq, venc, t))))
+              cmp(s"$tag vna $vna pu0 $pu0", NtnB.taxa(liq, venc, vna, pu0),
+                Referencia.ntnbTaxa(liq, venc, vna, pu0))
+          case "LFT" =>
+            for (vna <- Seq(i.vna, 0.0, -1000.0);
+                 pu0 <- pus(Referencia.lftPu(i.vna, Referencia.lftCotacao(liq, venc, i.taxa)),
+                   t => Referencia.lftPu(i.vna, Referencia.lftCotacao(liq, venc, t))))
+              cmp(s"$tag vna $vna pu0 $pu0", Lft.taxa(liq, venc, vna, pu0),
+                Referencia.lftTaxa(liq, venc, vna, pu0))
+          case _ =>
+        }
+      }
+    }
+    // per day, 6 NTN-F, 6 NTN-B at 4 VNAs and 6 LFT at 3, each at 4
+    // maturities and 19 prices
+    cmp.check(Adversos * 6 * 4 * 19L * (1 + 4 + 3))
+  }
+
+  test("ntnfTaxasZero is bit-identical with and without incluirCupons, NaN vertices included") {
+    val cmp = new Comparador
+    var nans = 0
+    for (seed <- Seeds; dia <- portfolio(seed); cupons <- Seq(false, true)) {
+      val c = curvaPre(dia.liq, seed)
+      val novo = Bootstrap.ntnfTaxasZero(dia.liq, c.ltnVencs, c.ltnTaxas, c.ntnfVencs, c.ntnfTaxas, cupons)
+      val ref = Referencia.ntnfTaxasZero(dia.liq, c.ltnVencs, c.ltnTaxas, c.ntnfVencs, c.ntnfTaxas, cupons)
+      assert(novo.map(v => (v.dataVencimento, v.diasUteis)) ==
+        ref.map(v => (v.dataVencimento, v.diasUteis)), s"seed $seed ${dia.liq}")
+      novo.zip(ref).foreach { case (a, b) =>
+        if (b.taxaZero.isNaN) nans += 1
+        cmp(s"seed $seed ${dia.liq} cupons=$cupons ${a.dataVencimento}", a.taxaZero, b.taxaZero)
+      }
+    }
+    cmp.check(Seeds.length * Dias * 2L)
+    assert(nans > 0, "no curve exercised the no-prior-coupon guard")
+  }
+
+  test("table contar equals weekdays minus binary-searched holidays") {
+    val ini = LocalDate.of(1989, 1, 1).toEpochDay.toInt
+    val fim = LocalDate.of(2101, 12, 31).toEpochDay.toInt
+    var erros = List.empty[String]
+    var n = 0L
+    def par(s: Int, e: Int): Unit = {
+      n += 1
+      if (BrCalendar.contar(s, e) != Referencia.contar(s, e) && erros.length < 10)
+        erros ::= s"contar(${LocalDate.ofEpochDay(s.toLong)}, ${LocalDate.ofEpochDay(e.toLong)}) = " +
+          s"${BrCalendar.contar(s, e)}, want ${Referencia.contar(s, e)}"
+    }
+    var s = ini
+    while (s <= fim) {
+      var e = s - 400
+      while (e <= s + 400) { par(s, e); e += 1 }
+      s += 1
+    }
+    // the regime switch and both table edges, against far dates on each side
+    val rng = new Random(17)
+    val marcos = Seq(BrCalendar.TransitionEpochDay, BrCalendar.InicioTabela, BrCalendar.FimTabela)
+    for (m <- marcos; d <- -3 to 3; _ <- 0 until 200) {
+      val longe = LocalDate.of(1800, 1, 1).toEpochDay.toInt + rng.nextInt(365 * 500)
+      par(m + d, longe)
+      par(longe, m + d)
+    }
+    assert(erros.isEmpty, erros.reverse.mkString("\n"))
+    assert(n > 33000000L)
+  }
+
   test("flows and the tuple schedule match the reference's sorted schedule") {
     for (seed <- Seeds.take(1); dia <- portfolio(seed); i <- dia.instrumentos) {
       assert(NtnF.fluxosCaixa(dia.liq, i.venc) ==
@@ -110,6 +197,8 @@ object ScheduleIdentitySpec {
 
   val Seeds: Seq[Long] = Seq(1L, 2L, 3L, 4L, 5L)
   val Dias = 80
+  /** Days of the first seed's portfolio whose instruments get adversarial solves. */
+  val Adversos = 6
 
   final case class Titulo(tipo: String, venc: LocalDate, taxa: Double, vna: Double)
   final case class Dia(liq: LocalDate, instrumentos: Seq[Titulo],
@@ -165,6 +254,36 @@ object ScheduleIdentitySpec {
     }
   }
 
+  final case class CurvaPre(ltnVencs: Seq[LocalDate], ltnTaxas: Seq[Double],
+                            ntnfVencs: Seq[LocalDate], ntnfTaxas: Seq[Double])
+
+  /** An LTN/NTN-F curve at `liq`: quarterly LTNs up to four years out and
+    * NTN-Fs maturing on January 1st up to twelve years out. One curve in
+    * five has a single LTN that matures before the first coupon date, so
+    * that the first grid point has no earlier coupon (a NaN vertex).
+    */
+  def curvaPre(liq: LocalDate, seed: Long): CurvaPre = {
+    val rng = new Random(seed * 1000 + liq.toEpochDay)
+    val nivel = 0.05 + 0.10 * rng.nextDouble()
+    def taxa(anos: Double) = r8(nivel + 0.01 * math.log1p(anos) * (rng.nextDouble() - 0.3))
+    val ltnVencs =
+      if (rng.nextInt(5) == 0) Seq(liq.plusDays(1L + rng.nextInt(20)))
+      else (1 to 16).map { k =>
+        val m = liq.plusMonths(3L * k)
+        LocalDate.of(m.getYear, ((m.getMonthValue - 1) / 3) * 3 + 1, 1)
+      }.filter(_ => rng.nextInt(3) == 0).distinct match {
+        case Seq() => Seq(LocalDate.of(liq.getYear + 1, 7, 1))
+        case vs => vs
+      }
+    val ntnfVencs = (liq.getYear + 1 to liq.getYear + 12).map(LocalDate.of(_, 1, 1))
+      .filter(_ => rng.nextInt(2) == 0) match {
+        case Seq() => Seq(LocalDate.of(liq.getYear + 5, 1, 1))
+        case vs => vs
+      }
+    CurvaPre(ltnVencs, ltnVencs.map(v => taxa((v.getYear - liq.getYear).toDouble)),
+      ntnfVencs, ntnfVencs.map(v => taxa((v.getYear - liq.getYear).toDouble)))
+  }
+
   /** The schedule-per-evaluation formulas: every evaluation rebuilds the
     * payment dates, counts business days and truncates each year fraction
     * through BigDecimal.
@@ -189,13 +308,102 @@ object ScheduleIdentitySpec {
 
     def normalizarTaxa(taxa: Double): Double = truncar(taxa, 8)
 
+    private val weekdayHolidaysOld = BrCalendar.holidaysOld.filter(BrCalendar.isWeekday)
+    private val weekdayHolidaysNew = BrCalendar.holidaysNew.filter(BrCalendar.isWeekday)
+
+    private def weekdaysIn(start: Int, end: Int): Int = {
+      val n = end - start
+      if (n <= 0) return 0
+      var count = (n / 7) * 5
+      var d = start + (n / 7) * 7
+      while (d < end) {
+        if (BrCalendar.isWeekday(d)) count += 1
+        d += 1
+      }
+      count
+    }
+
+    private def lowerBound(arr: Array[Int], key: Int): Int = {
+      val i = java.util.Arrays.binarySearch(arr, key)
+      if (i >= 0) i else -(i + 1)
+    }
+
+    private def countInRange(arr: Array[Int], lo: Int, hi: Int): Int =
+      if (hi <= lo) 0 else lowerBound(arr, hi) - lowerBound(arr, lo)
+
+    /** Business days in [start, end), negative when start > end, under the
+      * regime of `start`: weekdays minus the weekday holidays in range.
+      */
+    def contar(start: Int, end: Int): Long = {
+      val hol = if (start < BrCalendar.TransitionEpochDay) weekdayHolidaysOld else weekdayHolidaysNew
+      if (start <= end) (weekdaysIn(start, end) - countInRange(hol, start, end)).toLong
+      else -(weekdaysIn(end, start) - countInRange(hol, end, start)).toLong
+    }
+
+    def contar(start: LocalDate, end: LocalDate): Long =
+      contar(start.toEpochDay.toInt, end.toEpochDay.toInt)
+
+    /** Bracket search and bisection evaluating f at every point. */
+    def encontrarRaiz(f: Double => Double): Double = {
+      val f0 = f(0.01)
+      if (math.abs(f0) == 0) return 0.01
+      var interval: Option[(Double, Double)] = None
+      var a = 0.01; var fa = f0
+      var b = 0.02
+      var passo = 0.01
+      var i = 0
+      while (interval.isEmpty && i < 100 && b <= 10.0) {
+        val fb = f(b)
+        if (fa * fb < 0) interval = Some((a, b))
+        else { a = b; fa = fb; passo *= 1.6; b += passo }
+        i += 1
+      }
+      if (interval.isEmpty) {
+        a = 0.01; fa = f0
+        b = 0.01 - 0.01
+        passo = 0.01
+        i = 0
+        while (interval.isEmpty && i < 100 && b >= -1.0) {
+          val fb = f(b)
+          if (fa * fb < 0) interval = Some((b, a))
+          else { a = b; fa = fb; passo *= 1.6; b -= passo }
+          i += 1
+        }
+      }
+      interval match {
+        case None => Double.NaN
+        case Some((lo0, hi0)) =>
+          var lo = lo0; var hi = hi0
+          var flo = f(lo)
+          var it = 0
+          var res = Double.NaN
+          while (it < 100 && res.isNaN) {
+            val mid = (lo + hi) / 2
+            val fm = f(mid)
+            if (math.abs(fm) < 1e-12 || (hi - lo) / 2 < 1e-12) res = mid
+            else if (fm * flo < 0) hi = mid
+            else { lo = mid; flo = fm }
+            it += 1
+          }
+          if (res.isNaN) (lo + hi) / 2 else res
+      }
+    }
+
+    def subtrairMeses(data: LocalDate, meses: Int): LocalDate = {
+      var mes = data.getMonthValue - meses
+      val ano = data.getYear + (mes - 1) / 12 + (if ((mes - 1) % 12 < 0) -1 else 0)
+      mes = (mes - 1) % 12 + 1
+      if (mes <= 0) mes += 12
+      LocalDate.of(ano, mes, data.getDayOfMonth)
+    }
+
     def gerarDatasPagamento(inicio: LocalDate, fim: LocalDate,
                             intervaloMeses: Int = 6): Seq[LocalDate] = {
       val out = scala.collection.mutable.ArrayBuffer[LocalDate]()
       var d = fim
       while (d.isAfter(inicio)) {
         out += d
-        d = Bonds.subtrairMeses(d, intervaloMeses)
+        d = subtrairMeses(d, intervaloMeses)
       }
       out.sorted.toSeq
     }
@@ -220,7 +428,7 @@ object ScheduleIdentitySpec {
     }
 
     def anosTruncados(liq: LocalDate, venc: LocalDate): Double =
-      truncar(BrCalendar.contar(liq, venc) / 252.0, 14)
+      truncar(contar(liq, venc) / 252.0, 14)
 
     def ltnPu(liq: LocalDate, venc: LocalDate, taxa: Double): Double = {
       val t = normalizarTaxa(taxa)
@@ -233,7 +441,7 @@ object ScheduleIdentitySpec {
     }
 
     def ltnDuration(liq: LocalDate, venc: LocalDate): Double =
-      BrCalendar.contar(liq, venc) / 252.0
+      contar(liq, venc) / 252.0
 
     def ltnDv01(liq: LocalDate, venc: LocalDate, taxa0: Double, pu0: Double): Double = {
       val t = normalizarTaxa(taxa0)
@@ -258,7 +466,7 @@ object ScheduleIdentitySpec {
                                taxa0: Double): Double = {
       if (fluxos.isEmpty) return Double.NaN
       val termos = fluxos.map { case (d, v) =>
-        val anos = BrCalendar.contar(liq, d) / 252.0
+        val anos = contar(liq, d) / 252.0
         val vp = v / math.pow(1 + taxa0, anos)
         (vp, vp * anos)
       }
@@ -270,7 +478,7 @@ object ScheduleIdentitySpec {
 
     def ntnfTaxa(liq: LocalDate, venc: LocalDate, pu0: Double): Double = {
       if (pu0 <= 0) return Double.NaN
-      truncar(Bonds.encontrarRaiz(t => ntnfPu(liq, venc, t) - pu0), 8)
+      truncar(encontrarRaiz(t => ntnfPu(liq, venc, t) - pu0), 8)
     }
 
     def ntnfDuration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
@@ -290,7 +498,7 @@ object ScheduleIdentitySpec {
 
     def ntnbTaxa(liq: LocalDate, venc: LocalDate, vna: Double, pu0: Double): Double = {
       if (pu0 <= 0) return Double.NaN
-      truncar(Bonds.encontrarRaiz(t => ntnbPu(vna, ntnbCotacao(liq, venc, t)) - pu0), 8)
+      truncar(encontrarRaiz(t => ntnbPu(vna, ntnbCotacao(liq, venc, t)) - pu0), 8)
     }
 
     def ntnbDuration(liq: LocalDate, venc: LocalDate, taxa0: Double): Double =
@@ -319,7 +527,7 @@ object ScheduleIdentitySpec {
 
     def lftTaxa(liq: LocalDate, venc: LocalDate, vna: Double, pu0: Double): Double = {
       if (pu0 <= 0) return Double.NaN
-      truncar(Bonds.encontrarRaiz(t => lftPu(vna, lftCotacao(liq, venc, t)) - pu0), 8)
+      truncar(encontrarRaiz(t => lftPu(vna, lftCotacao(liq, venc, t)) - pu0), 8)
     }
 
     def ntnbTaxasZero(liq: LocalDate, vencimentos: Seq[LocalDate], taxas: Seq[Double],
@@ -327,9 +535,9 @@ object ScheduleIdentitySpec {
       val ordered = vencimentos.zip(taxas).sortBy(_._1)
       val vencs = ordered.map(_._1)
       val interp = new Interpolador(
-        vencs.map(v => BrCalendar.contar(liq, v)), ordered.map(_._2), "flat_forward")
+        vencs.map(v => contar(liq, v)), ordered.map(_._2), "flat_forward")
       val grid = gerarDatasPagamento(liq, vencs.last, intervaloMeses = 3)
-      val dias = grid.map(d => BrCalendar.contar(liq, d))
+      val dias = grid.map(d => contar(liq, d))
       val anos = dias.map(_ / 252.0)
       val tir = dias.map(interp(_))
       val zeros = scala.collection.mutable.LinkedHashMap[LocalDate, Double]()
@@ -352,6 +560,43 @@ object ScheduleIdentitySpec {
       }
       val all = grid.indices.map(i => Bootstrap.ZeroVertex(grid(i), dias(i), zeros(grid(i))))
       if (incluirCupons) all else all.filter(v => vencs.contains(v.dataVencimento))
+    }
+
+    def ntnfTaxasZero(liq: LocalDate,
+                      vencimentosLtn: Seq[LocalDate], taxasLtn: Seq[Double],
+                      vencimentosNtnf: Seq[LocalDate], taxasNtnf: Seq[Double],
+                      incluirCupons: Boolean): Seq[Bootstrap.ZeroVertex] = {
+      val interpLtn = new Interpolador(
+        vencimentosLtn.map(v => contar(liq, v)), taxasLtn, "flat_forward")
+      val interpNtnf = new Interpolador(
+        vencimentosNtnf.map(v => contar(liq, v)), taxasNtnf, "flat_forward")
+      val ultimoLtn = vencimentosLtn.max
+      val ultimoNtnf = vencimentosNtnf.max
+      val grid = gerarDatasPagamento(liq, ultimoNtnf, intervaloMeses = 6)
+      val spot = scala.collection.mutable.LinkedHashMap[LocalDate, Double]()
+      grid.foreach { venc =>
+        val du = contar(liq, venc)
+        if (!venc.isAfter(ultimoLtn)) {
+          spot(venc) = interpLtn(du)
+        } else {
+          val tir = interpNtnf(du)
+          val datasFluxo = gerarDatasPagamento(liq, venc, 6).dropRight(1)
+          if (datasFluxo.isEmpty) {
+            spot(venc) = Double.NaN
+          } else {
+            val pvCupons = calcularPv(
+              datasFluxo.map(_ => NtnF.ValorCupom),
+              datasFluxo.map(spot(_)),
+              datasFluxo.map(d => contar(liq, d) / 252.0))
+            val preco = ntnfPu(liq, venc, tir)
+            val fator = NtnF.ValorFinal / (preco - pvCupons)
+            spot(venc) = math.pow(fator, 1 / (du / 252.0)) - 1
+          }
+        }
+      }
+      val all = grid.map(v => Bootstrap.ZeroVertex(v, contar(liq, v), spot(v)))
+      if (incluirCupons) all
+      else all.filter(v => vencimentosNtnf.contains(v.dataVencimento))
     }
   }
 }

@@ -104,4 +104,27 @@ class TruncarSpec extends AnyFunSuite {
     val f = falhas(xs)
     assert(f.isEmpty, f.mkString("\n"))
   }
+
+  test("the year-fraction table holds trunc14(du/252) for every du it covers") {
+    val t = graft.bonds.Bonds.Anos14
+    assert(t.length > 27000)
+    val f = t.indices.iterator.filterNot(du =>
+      java.lang.Double.doubleToLongBits(t(du)) ==
+        java.lang.Double.doubleToLongBits(Num.truncar(du / 252.0, 14)))
+      .take(10).map(du => s"du $du: table ${t(du)}, truncar ${Num.truncar(du / 252.0, 14)}").toSeq
+    assert(f.isEmpty, f.mkString("\n"))
+    assert(graft.bonds.Bonds.anosTruncados(t.length.toLong) == Num.truncar(t.length / 252.0, 14))
+  }
+
+  test("a 6-place quote in [0, 10] is its own trunc6: every k/10^6, k in 0..10^7") {
+    var k = 0
+    var erros = List.empty[String]
+    while (k <= 10000000) {
+      val x = k / 1e6
+      if (x != JBigDecimal.valueOf(k.toLong, 6).doubleValue() || Num.truncar(x, 6) != x)
+        erros ::= s"k $k: ${Num.truncar(x, 6)}"
+      k += 1
+    }
+    assert(erros.isEmpty, erros.take(10).mkString("\n"))
+  }
 }
