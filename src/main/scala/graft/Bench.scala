@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Queries are materialized through the noop sink so the full plan
@@ -25,17 +23,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Host.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Verify.silenceIntendedGlobalWindowWarn()
+    val spark = Sessions.local()
 
     // the per-repeat producer clears below only empty the in-JVM memo
     // maps — with an artifact store configured, loadOrBuild would
@@ -58,7 +46,7 @@ object Bench {
     val warmups = SparkEntry.queries.take(1).toSeq ++
       SparkEntry.queries.get(q50).map(q50 -> _)
     warmups.foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Measure.noop(fn(spark, sfDir))
       catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup $name failed: $e")
       }
@@ -86,36 +74,25 @@ object Bench {
       for (r <- 1 to repeats if !failed) {
         clearProducerMemo(name)
         System.err.println(s"[bench] running $name ($r/$repeats)")
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          times += (System.nanoTime() - t0) / 1e9
-        } catch { case NonFatal(e) =>
+        try times += Measure.seconds(Measure.noop(fn(spark, sfDir)))
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: $e")
           failed = true
         }
-        // untimed: broadcasts/shuffle state are reclaimed by the
-        // ContextCleaner only when the driver GCs — without this, state
-        // from 60+ prior queries piles up and the late queries pay the
-        // GC wall
-        System.gc()
       }
       (name, times.toSeq, failed)
     }
     val results = outcomes.collect { case (n, t, false) => n -> t }
     val failedJson = outcomes.collect { case (n, _, true) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
-    // Locale.ROOT: the f interpolator uses the default JVM locale, which
-    // renders comma decimal separators (invalid JSON) on e.g. pt_BR
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Measure.num
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v.min) }
       .mkString("{", ",", "}")
     // all repeats, not just the min: REPRO.md's jitter-window
     // adjudication (did a slowdown window cover all repeats of a query?)
     // becomes data-driven from the artifact instead of re-run-driven
     val samples = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(num).mkString("[", ",", "]")
+      "\"" + k + "\":" + v.map(num(_)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = results.map(_._2.min).sum
     val line =
@@ -127,16 +104,10 @@ object Bench {
     // file — a targeted re-run must not clobber the full board's
     // artifact (that overwrite once fed a 1-query "board" to the
     // adjudication tool)
-    println(line)
-    System.out.flush()
-    System.err.println(line)
     val outFile =
       if (only.isDefined) "BENCH_ONLY_LAST.json" else "BENCH_LAST.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outFile: $e")
-    }
+    Measure.emit(line, outFile)
+    System.err.println(line)
     // COMPACT FINAL LINE (r12, VERDICT r11 item 2): the driver stores a
     // bounded 2000-char TAIL of the run output, so the full line above
     // (~15 KB at 167 queries) has arrived truncated mid-JSON every round
@@ -148,8 +119,6 @@ object Bench {
     // min + all repeat samples remain in the full line just above, on
     // stderr, and in BENCH_LAST.json — nothing is dropped, this only
     // ADDS a driver-parseable summary.
-    def num2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val skeleton =
       s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
         s""""n_queries":${outcomes.size},"full":"$outFile","queries":{},""" +
@@ -157,7 +126,7 @@ object Bench {
     var room = 1750 - skeleton.length
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     results.sortBy { case (_, v) => -v.min }.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + num2(v.min)
+      val entry = "\"" + k + "\":" + num(v.min, 2)
       val cost = entry.length + (if (picked.isEmpty) 0 else 1)
       if (cost <= room) { picked += (k -> entry); room -= cost }
     }

@@ -6,6 +6,6 @@ object Host {
   /** Local Spark cores: `SPARK_GRAFT_CPUS`, else every processor the JVM
     * may use.
     */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    Runtime.getRuntime.availableProcessors.toString)
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

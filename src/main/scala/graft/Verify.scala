@@ -1,35 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** q09's dense_rank and Cpm's meeting rank run a global window over a
-    * <= 25-row AGGREGATE — the single partition is the intended plan (the
-    * reference's own shape), so WindowExec's per-run performance WARN is
-    * noise that buries real regressions in the bench/verify logs. Silence
-    * that one logger; everything else stays at WARN.
-    */
+  /** Kept for callers outside this build; the session factory applies it. */
   def silenceIntendedGlobalWindowWarn(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    Sessions.silenceIntendedGlobalWindowWarn()
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set once here instead of per
-      // table access (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceIntendedGlobalWindowWarn()
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name-prefix filter for targeted local runs
     // (same contract as Bench's SPARK_GRAFT_ONLY); the driver gate sets no

@@ -27,6 +27,8 @@ import java.util.Arrays
   * `contar(s, e) = cum(e) - cum(s)` under the regime of `s`, for every
   * (s, e) including s > e. Neither list has a holiday outside the span
   * (checked at load), so cum extends past both ends by weekday arithmetic.
+  * The same tables answer `ehDiaUtil`, `deslocar` and `gerar`: under a
+  * regime, d is a business day iff cum(d + 1) - cum(d) = 1.
   *
   * All hot-path methods operate on epoch-day Ints (Spark's internal DateType
   * representation) so Catalyst expressions can call them directly from
@@ -63,10 +65,6 @@ object BrCalendar {
 
   @inline def isWeekday(epochDay: Int): Boolean = dayOfWeek(epochDay) < 5
 
-  /** Holiday array for the regime governing `anchorEpochDay`. */
-  @inline def regimeHolidays(anchorEpochDay: Int): Array[Int] =
-    if (anchorEpochDay < TransitionEpochDay) holidaysOld else holidaysNew
-
   /** Span of the cumulative tables, [1990-01-01, 2100-01-01): every
     * holiday of both lists falls inside it.
     */
@@ -79,6 +77,12 @@ object BrCalendar {
   /** Weekdays in [-3, d): epoch day -3 (1969-12-29) was a Monday. */
   @inline private def semana(d: Long): Long =
     5 * Math.floorDiv(d + 3, 7L) + math.min(Math.floorMod(d + 3, 7L), 5L)
+
+  /** Is `epochDay` a business day under the holiday list `hol`? Builds the
+    * cumulative tables; every query reads the tables instead.
+    */
+  private def isBdayUnder(epochDay: Int, hol: Array[Int]): Boolean =
+    isWeekday(epochDay) && Arrays.binarySearch(hol, epochDay) < 0
 
   /** Business days of one regime in [InicioTabela, InicioTabela + i), for
     * i in 0..FimTabela - InicioTabela.
@@ -96,6 +100,10 @@ object BrCalendar {
   private val acumuladosOld: Array[Int] = acumulados(holidaysOld)
   private val acumuladosNew: Array[Int] = acumulados(holidaysNew)
 
+  /** The cumulative table of the regime governing `anchorEpochDay`. */
+  @inline private def tabela(anchorEpochDay: Int): Array[Int] =
+    if (anchorEpochDay < TransitionEpochDay) acumuladosOld else acumuladosNew
+
   /** Business days in [InicioTabela, d) under the table's regime, negative
     * before InicioTabela. Outside the span no holiday exists, so the count
     * extends past both ends by weekdays.
@@ -112,42 +120,36 @@ object BrCalendar {
     * reference's per-row `_expressao_feriados`.
     */
   def contar(startEpochDay: Int, endEpochDay: Int): Long = {
-    val t = if (startEpochDay < TransitionEpochDay) acumuladosOld else acumuladosNew
+    val t = tabela(startEpochDay)
     acumulado(t, endEpochDay) - acumulado(t, startEpochDay)
   }
 
   def contar(start: LocalDate, end: LocalDate): Long =
     contar(start.toEpochDay.toInt, end.toEpochDay.toInt)
 
+  /** Is `epochDay` a business day under the regime table `t`? */
+  @inline private def util(t: Array[Int], epochDay: Int): Boolean =
+    acumulado(t, epochDay + 1L) - acumulado(t, epochDay) == 1
+
   /** Is `epochDay` a business day under ITS OWN date's regime? */
-  def ehDiaUtil(epochDay: Int): Boolean = {
-    isWeekday(epochDay) && {
-      val hol = regimeHolidays(epochDay)
-      Arrays.binarySearch(hol, epochDay) < 0
-    }
-  }
+  def ehDiaUtil(epochDay: Int): Boolean = util(tabela(epochDay), epochDay)
 
   def ehDiaUtil(d: LocalDate): Boolean = ehDiaUtil(d.toEpochDay.toInt)
 
-  /** Is `epochDay` a business day under the regime of `anchor`? (used inside
-    * deslocar, where the whole operation runs under the original date's list)
-    */
-  private def isBdayUnder(epochDay: Int, hol: Array[Int]): Boolean =
-    isWeekday(epochDay) && Arrays.binarySearch(hol, epochDay) < 0
-
   /** Roll to nearest business day in `direction` (+1/-1) if not already one,
-    * then add n business days (sign of n gives direction of the walk).
+    * then add n business days (sign of n gives direction of the walk). The
+    * whole operation runs under the regime of `epochDay`.
     */
   def deslocar(epochDay: Int, n: Int, rollForward: Boolean): Int = {
-    val hol = regimeHolidays(epochDay)
+    val t = tabela(epochDay)
     var d = epochDay
     val rollStep = if (rollForward) 1 else -1
-    while (!isBdayUnder(d, hol)) d += rollStep
+    while (!util(t, d)) d += rollStep
     var remaining = math.abs(n)
     val step = Integer.signum(n)
     while (remaining > 0) {
       d += step
-      while (!isBdayUnder(d, hol)) d += step
+      while (!util(t, d)) d += step
       remaining -= 1
     }
     d
@@ -164,16 +166,16 @@ object BrCalendar {
             closed: String = "both", regime: String = "novo"): Seq[LocalDate] = {
     val s = start.toEpochDay.toInt
     val e = end.toEpochDay.toInt
-    val hol: Array[Int] = regime match {
-      case "antigo"  => holidaysOld
-      case "novo"    => holidaysNew
-      case "inferir" => regimeHolidays(s)
+    val t: Array[Int] = regime match {
+      case "antigo"  => acumuladosOld
+      case "novo"    => acumuladosNew
+      case "inferir" => tabela(s)
       case other     => throw new IllegalArgumentException(s"regime: $other")
     }
     val lo = closed match { case "both" | "left"  => s; case _ => s + 1 }
     val hi = closed match { case "both" | "right" => e; case _ => e - 1 }
     (lo to hi).iterator
-      .filter(d => isBdayUnder(d, hol))
+      .filter(d => util(t, d))
       .map(d => LocalDate.ofEpochDay(d.toLong))
       .toSeq
   }

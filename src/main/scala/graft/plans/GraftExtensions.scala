@@ -14,7 +14,7 @@ import graft.sim.{DotCosine, TopKByScore}
 /** SparkSessionExtensions entry point: injects the engine's custom
   * Catalyst expressions so any session created with
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   builder.withExtensions(new GraftExtensions) ...
   *   // or spark.sql.extensions=graft.plans.GraftExtensions
   *
   * can use them from SQL — the deployment shape for a shared cluster

@@ -207,7 +207,7 @@ object Pipeline6 {
   private val IncrBatchMod = 5 // doc_id % 5 = 4 -> the "new batch"
 
   /** The q76 plan at an arbitrary batch residue — public so the
-    * incremental scale ladder (`tools/IncrLadder`, judge directive
+    * incremental scale ladder (`tools/Ladder incr`, judge directive
     * r10-#6) can run the IDENTICAL plan at the realistic daily
     * batch:corpus ratio (~1:100, batchMod = 100) across inflated
     * corpora; the board query keeps its oracle-pinned mod-5 shape.

@@ -2,9 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{Bench, SparkEntry, Verify}
+import graft.{Bench, Measure, SparkEntry}
+import graft.Measure.num
 import scala.util.control.NonFatal
 
 /** Automates REPRO.md's adjudication recipe (judge directive r9-#1,
@@ -63,17 +62,7 @@ object Adjudicate {
     System.err.println(s"[adjudicate] ${movers.size} movers: " +
       movers.map(m => f"${m._1} ${m._3 / m._2}%.2fx").mkString(", "))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Host.cpus}]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Host.cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Verify.silenceIntendedGlobalWindowWarn()
+    val spark = graft.Sessions.local()
     require(graft.queries.ArtifactStore.dirOf(spark).isEmpty,
       "Adjudicate measures production computation; the artifact store must be unset")
 
@@ -85,21 +74,18 @@ object Adjudicate {
     // monotone 3.24 -> 0.68 s over 12 repeats vs its 0.44 in-board
     // record) — the convergence annotation below flags that state.
     SparkEntry.queries.get("q50_neardup_clusters").foreach { fn =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Measure.noop(fn(spark, sfDir))
       catch { case NonFatal(e) =>
         System.err.println(s"[adjudicate] warmup q50_neardup_clusters failed: $e")
       }
     }
-
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
     val rows = movers.map { case (name, rec, closeMin) =>
       val fn = SparkEntry.queries(name)
       // session state from the PREVIOUS adjudicated query must not
       // subsidize this one: start from empty memos, like a fresh JVM
       graft.queries.Artifacts.clearAll()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Measure.noop(fn(spark, sfDir))
       catch { case NonFatal(e) =>
         System.err.println(s"[adjudicate] warmup $name failed: $e")
       }
@@ -110,19 +96,14 @@ object Adjudicate {
       val attempts = (1 to repeats).map { r =>
         Bench.clearProducerMemo(name)
         System.err.println(s"[adjudicate] $name ($r/$repeats)")
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[adjudicate] $name failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.gc()
-        (dt, ok)
+        try Some(Measure.seconds(Measure.noop(fn(spark, sfDir))))
+        catch { case NonFatal(e) =>
+          System.err.println(s"[adjudicate] $name failed: ${e.getMessage}")
+          None
+        }
       }
-      val samples = attempts.filter(_._2).map(_._1)
-      val failures = attempts.count(!_._2)
+      val samples = attempts.flatten
+      val failures = attempts.count(_.isEmpty)
       if (samples.isEmpty) {
         System.err.println(s"[adjudicate] $name FAILED on all $repeats repeats")
         s""""$name":{"samples":[],"failures":$failures,""" +
@@ -150,7 +131,7 @@ object Adjudicate {
           else "REGRESSION — reproduces in isolation; find the code change"
         System.err.println(f"[adjudicate] $name isolated_min=$isoMin%.3f " +
           f"record=$rec%.3f ratio=$ratio%.2f → $verdict")
-        s""""$name":{"samples":${samples.map(num).mkString("[", ",", "]")},""" +
+        s""""$name":{"samples":${samples.map(num(_)).mkString("[", ",", "]")},""" +
           s""""failures":$failures,""" +
           s""""isolated_min":${num(isoMin)},"record_prior":${num(rec)},""" +
           s""""close_min":${num(closeMin)},"ratio_vs_record":${num(ratio)},""" +
@@ -163,16 +144,11 @@ object Adjudicate {
       s""" producer clears, sf $sfDir, threshold ${num(threshold)}x vs""" +
       s""" ${args(0)}","close_artifact":"${args(1)}",""" +
       s""""queries":${rows.mkString("{", ",", "}")}}"""
-    println(line)
-    System.out.flush()
     // default output is a round-local name, NOT BENCH_ADJUDICATION.json:
     // that file is the standing evidence of a PAST adjudication and a
     // fresh run must not clobber it by accident
     val out = if (args.length >= 4) args(3) else "BENCH_ADJUDICATION_NEW.json"
-    try Files.writeString(Paths.get(out), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[adjudicate] could not write $out: $e")
-    }
+    Measure.emit(line, out)
     spark.stop()
   }
 }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{SparkEntry, Verify}
+import graft.{Measure, SparkEntry}
 import graft.queries.{ArtifactStore, Artifacts}
 import scala.util.control.NonFatal
 
@@ -47,30 +45,14 @@ object BenchStore {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.Host.cpus
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Verify.silenceIntendedGlobalWindowWarn()
+    val spark = graft.Sessions.local()
 
     val store = java.nio.file.Files
       .createTempDirectory("graft-bench-store").toFile.getAbsolutePath
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      dt
-    }
+    def runOnce(name: String): Double =
+      Measure.seconds(Measure.noop(SparkEntry.queries(name)(spark, sfDir)))
 
     // codegen/JIT warmup outside any timed mode (REPRO.md protocol)
     Artifacts.clearAll()
@@ -109,12 +91,11 @@ object BenchStore {
     val warm = phase("store_warm")
     spark.conf.set(ArtifactStore.DirConf, "")
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Measure.num
     def block(rs: Seq[(String, Seq[Double])]): String =
       rs.map { case (k, v) =>
         "\"" + k + "\":{\"min\":" + num(v.min) + ",\"samples\":" +
-          v.map(num).mkString("[", ",", "]") + "}"
+          v.map(num(_)).mkString("[", ",", "]") + "}"
       }.mkString("{", ",", "}")
     def total(rs: Seq[(String, Seq[Double])]): Double = rs.map(_._2.min).sum
 
@@ -122,13 +103,7 @@ object BenchStore {
       s"""{"metric":"artifact_store_modes","unit":"sec","sf":"$sfDir","repeats":$repeats,""" +
         s""""totals":{"default":${num(total(default))},"store_cold":${num(total(cold))},"store_warm":${num(total(warm))}},""" +
         s""""default":${block(default)},"store_cold":${block(cold)},"store_warm":${block(warm)}}"""
-    println(line)
-    System.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_STORE.json"), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench-store] could not write BENCH_STORE.json: $e")
-    }
+    Measure.emit(line, "BENCH_STORE.json")
     ArtifactStore.deleteTree(new java.io.File(store))
     spark.stop()
   }

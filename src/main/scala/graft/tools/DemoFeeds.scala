@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Hand-runnable demo of the repo-auction dataset, the DI-over scalar and
   * the pure URL builders:
   *   sbt "runMain graft.tools.DemoFeeds"
   */
 object DemoFeeds {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]").appName("graft-demo-feeds")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     // the reference docstring's own CSV sample (compromissada.py:7-17)
     val csv =

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.SparkSession
 
 /** Hand-runnable demo of the Excel-backed sources: builds a small real
   * .xlsx in memory (ZIP of SpreadsheetML parts) and drives the three
@@ -36,12 +35,7 @@ object DemoXlsx {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]").appName("graft-demo-xlsx")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     // shared strings: 0..8
     val shared = Seq("Categoria", "Nov/06", "I - EMISSÕES", "Vendas", "LTN",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -96,21 +95,13 @@ object SimhashRecall {
 
   def main(args: Array[String]): Unit = {
     val nBase = sys.env.getOrElse("SPARK_GRAFT_RECALL_NBASE", "500").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Host.cpus}]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Host.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val (docs, planted) = fixture(spark, nBase)
     val docsM = docs.localCheckpoint()
     val plantedM = planted.localCheckpoint()
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    def num(v: Double): String = graft.Measure.num(v, 4)
 
     val cells = for (w <- Widths; r <- Radii) yield {
       val rows = cell(spark, docsM, plantedM, w, r)
@@ -132,12 +123,7 @@ object SimhashRecall {
         s""""note":"grade k = k of $WordsPerDoc distinct words replaced; deterministic md5 tokens, zero RNG"},""" +
         s""""widths":[${Widths.mkString(",")}],"radii":[${Radii.mkString(",")}],""" +
         s""""cells":${cells.mkString("{", ",", "}")}}"""
-    println(line)
-    System.out.flush()
-    try Files.writeString(Paths.get("SIMHASH_RECALL.json"), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[simrec] could not write SIMHASH_RECALL.json: $e")
-    }
+    graft.Measure.emit(line, "SIMHASH_RECALL.json")
     spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sim.Similarity
 
 /** Quality evidence for the ANN scale path, now load-bearing for three
@@ -13,15 +12,7 @@ import graft.sim.Similarity
   * must be stable when the store is int8-quantized (the 4:1 compression
   * a 100 TB embedding store applies before anything else touches it).
   */
-class AnnRecallSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AnnRecallSpec extends SparkSuite {
   private lazy val emb =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

@@ -2,8 +2,6 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{ArtifactStore, Artifacts}
 
 /** The parquet artifact store (directive: memo artifacts must survive a
@@ -19,15 +17,7 @@ import graft.queries.{ArtifactStore, Artifacts}
   * [[org.apache.hadoop.fs.FileSystem]] API, so an `hdfs://`/`s3a://`
   * deployment exercises exactly the code paths pinned here.
   */
-class ArtifactStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ArtifactStoreSpec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   private def storedDir(root: String, corpus: String, name: String): Boolean =

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.queries.{Artifacts, ClusterMemo, GramMemo}
 import graft.queries.Artifacts._
 
@@ -11,15 +8,7 @@ import graft.queries.Artifacts._
   * relies on — a producer measures its build on every repeat, and every
   * other artifact stays warm for the consumers.
   */
-class ArtifactsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ArtifactsSpec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   private val clearTable: Map[String, Set[String]] = Map(

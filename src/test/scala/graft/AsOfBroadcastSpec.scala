@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.AsOf
 
 /** The broadcast as-of must agree with the windowed as-of on the same
   * inputs (backward and forward, including exact-key ties and misses).
   */
-class AsOfBroadcastSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AsOfBroadcastSpec extends SparkSuite {
   test("broadcast as-of == windowed as-of (events fixture)") {
     import graft.queries.Tables
     val ev = Tables.eventsMicros(spark, "/root/testdata/sf0.001")

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.BcLeiloes
 
 /** BCB auction pipeline vs the reference golden
   * (tests/bc/test_leiloes.py:20-33).
   */
-class BcLeiloesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BcLeiloesSpec extends SparkSuite {
   test("bc leiloes pipeline matches golden parquet") {
     import spark.implicits._
     val base = BcLeiloes.lerCsv(spark,

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.Bpe
 
 /** Batched BPE training (judge directive r9-#3): the production merge
@@ -16,13 +14,7 @@ import graft.text.Bpe
   * learner's own self-consistency invariant (the trained vocab equals
   * the merge fold re-applied from scratch).
   */
-class BpeBatchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeBatchSpec extends SparkSuite {
   import spark.implicits._
 
   private val d = "/root/testdata/sf0.001"

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.Bpe
 
 /** BPE learner semantics on the classic Sennrich corpus
@@ -10,13 +8,7 @@ import graft.text.Bpe
   * determined by the weighted pair counts with lexicographic
   * tie-breaks, so the golden below is hand-computable.
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val docs = Seq(

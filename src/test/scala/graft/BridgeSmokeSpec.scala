@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Construction smoke for every bridge-built Column API (the r7 bug
   * class: an aggregate that works when the analyzer hands its SQL
@@ -14,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * each public Column builder over a 2-row frame and forces evaluation;
   * any constructor-time `require` on an unresolved child fails HERE.
   */
-class BridgeSmokeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BridgeSmokeSpec extends SparkSuite {
   private def texts = {
     import spark.implicits._
     Seq((1L, "the quick brown fox jumps over the lazy dog"),

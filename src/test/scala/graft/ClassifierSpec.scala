@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch-ten semantics on constructed corpora: the NB classifier must go
   * perfectly diagonal when languages are separable (the driver fixture
@@ -11,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * can't show the classifier LEARNS), and BM25 must honor tf saturation
   * and length normalization.
   */
-class ClassifierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClassifierSpec extends SparkSuite {
   import spark.implicits._
 
   /** Writes rows as a documents.parquet in a temp dir, returns the dir. */

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.Compromissada
 import graft.sources.RawFiles
 
 /** Golden: the reference's own docstring example CSV and expected output
   * (compromissada.py:7-17 input, :105-113 doctest table).
   */
-class CompromissadaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CompromissadaSpec extends SparkSuite {
   private val csv =
     """id,dataMovimento,horaInicio,publicoPermitidoLeilao,numeroComunicado,nomeTipoOferta,ofertante,prazoDiasCorridos,dataLiquidacao,dataRetorno,volumeAceito,taxaCorte,percentualCorte
       |ac1b013d13d6fb1d9d9e251b8000121e,2025-08-21,12:00,TodoMercado,43716,Compromissada 1047,Banco Central,91,2025-08-22,2025-11-21,5000000,"99,78","64,13"

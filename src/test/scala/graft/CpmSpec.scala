@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.{Cpm, Probabilities}
 
 /** COPOM implied-probability pipeline vs the reference fixture
   * (tests/selic/data/cpm_29012025.parquet) and the reference test
   * invariants (tests/selic/test_probabilities.py).
   */
-class CpmSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CpmSpec extends SparkSuite {
   private lazy val fixture = spark.read
     .parquet("/root/reference/tests/selic/data/cpm_29012025.parquet")
     .withColumnRenamed("TradeDate", "data_referencia")

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.curve.{Curve, Interpolador}
 
 /** Golden tests from the reference doctests:
   * Interpolador (/root/reference/pyield/interpolador.py:28-53,232-247,383-400)
   * and forwards (/root/reference/pyield/fwd.py:74-146).
   */
-class CurveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CurveSpec extends SparkSuite {
   test("Interpolador scalar goldens") {
     val dus = Seq(30L, 60L, 90L)
     val txs = Seq(0.045, 0.05, 0.055)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.DedupOps
 
 /** Connected components and the near-dup clustering pipeline: synthetic
@@ -11,15 +9,7 @@ import graft.dedup.DedupOps
   * documents fixture against a driver-side union-find over the same
   * verified edges.
   */
-class DedupClusterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupClusterSpec extends SparkSuite {
   test("connectedComponents: chain, cycle, isolated node (both paths)") {
     val sp = spark
     import sp.implicits._

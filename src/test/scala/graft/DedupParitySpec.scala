@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.{DedupOps, NGramArray, SortedArraysJaccard}
 
 /** Native Catalyst dedup expressions vs their composed-HOF twins, and the
   * pigeonhole-banded SimHash pair join vs the brute-force all-pairs form
   * (which the banding must reproduce exactly for Hamming <= 2).
   */
-class DedupParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupParitySpec extends SparkSuite {
   private lazy val docs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))

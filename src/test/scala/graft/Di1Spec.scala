@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.curve.Interpolador
 import graft.datasets.{Di1, Futuro}
 
@@ -11,15 +9,7 @@ import graft.datasets.{Di1, Futuro}
   * same curve (the reference's expr⇄scalar parity contract,
   * tests/tpf/test_expr_titulos.py style).
   */
-class Di1Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Di1Spec extends SparkSuite {
   private lazy val di1 = Futuro.enriquecer(
     spark.read.parquet(
       "/root/reference/tests/b3/data/boletim_negociacao_20230202_DI1.parquet"),

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Tables
 import graft.streaming.EventStreams
 
@@ -16,15 +14,7 @@ import graft.streaming.EventStreams
   * contract, or a regeneration silently breaks every event query. This
   * spec writes the SAME logical rows in both shapes and pins equality.
   */
-class EventsShapeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventsShapeSpec extends SparkSuite {
   import spark.implicits._
 
   // one row per event type, microsecond-precision offsets included so

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Artifacts, FeatureMemo, Tables}
 import graft.text.TextOps
@@ -15,15 +13,7 @@ import graft.text.TextOps
   * (same plan per session, rebuilt after clear) that Bench's
   * producer-clearing protocol assumes.
   */
-class FeatureMemoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FeatureMemoSpec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("features == the inline per-doc expressions, column for column") {

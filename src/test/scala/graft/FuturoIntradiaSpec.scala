@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.FuturoIntradia
 import graft.sources.DerivativosIntradia
 
-class FuturoIntradiaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FuturoIntradiaSpec extends SparkSuite {
   test("DAP intraday snapshot: rate renames, decimals, forwards") {
     val snap = DerivativosIntradia.ler(spark,
       "/root/reference/tests/b3/data/derivativos_intradia_20260310_DAP.json")

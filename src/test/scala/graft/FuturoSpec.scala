@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.{Contratos, Futuro}
 
 /** End-to-end futures enrichment vs the reference's canonical goldens:
@@ -11,15 +10,7 @@ import graft.datasets.{Contratos, Futuro}
   * rel_tol=1e-4, tests/b3/test_pipeline_futuro.py:85-95; the raw input
   * here is identical so we hold a tighter 1e-9).
   */
-class FuturoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FuturoSpec extends SparkSuite {
   private val b3 = "/root/reference/tests/b3/data"
 
   test("vencimento_expr doctests (contratos.py:70-153)") {

@@ -1,18 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ImaQ
 
-class ImaQSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ImaQSpec extends SparkSuite {
   test("IMA-Q HTML stock reader matches reference golden parquet") {
     val got = ImaQ.estoque(spark,
       "/root/reference/tests/tpf/data/imaq_20260204.html",

@@ -1,22 +1,13 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.IntervalJoin
 
 /** Bucketed interval join: parity with the naive range join (including
   * window-boundary semantics) and the skew-bound argument.
   */
-class IntervalJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntervalJoinSpec extends SparkSuite {
   import spark.implicits._
 
   private def ts(sec: Long) = new Timestamp(sec * 1000L)

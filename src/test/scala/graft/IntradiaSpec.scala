@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SecundarioIntradia
 
 /** Intraday secondary-market reader vs the reference golden, ignoring the
   * query-time metadata columns exactly as the reference test does
   * (tests/tpf/test_secundario_intradia.py).
   */
-class IntradiaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IntradiaSpec extends SparkSuite {
   test("intradia reader matches golden (modulo query-time columns)") {
     val raw = SecundarioIntradia.parsear(spark,
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(

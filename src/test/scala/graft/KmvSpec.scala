@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Kmv
 
 /** KMV distinct-count sketch: exact below k, bounded error above it,
   * duplicate-blind, and invariant to physical partitioning (the merge
   * path must be value-identical to single-partition evaluation).
   */
-class KmvSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KmvSpec extends SparkSuite {
   import spark.implicits._
 
   private def estimate(values: Seq[String], k: Int,

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.Leiloes
 
 /** Auction pipeline vs the reference golden: the enrichment over the raw
   * API JSON fixture plus the pinned PTAX frame must reproduce
   * leilao_20251023.parquet (tests/tpf/test_leilao.py:30-44).
   */
-class LeiloesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LeiloesSpec extends SparkSuite {
   test("leiloes pipeline matches golden parquet") {
     import spark.implicits._
     val base = Leiloes.lerJson(spark,

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.DedupOps
 
 /** Equivalence of the r12 numeric MinHash representation with the hex
@@ -28,15 +26,7 @@ import graft.dedup.DedupOps
   * DuckDB oracle — which still computes hex strings — gates every
   * declared query's final rows.
   */
-class MinHashNumEquivalenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MinHashNumEquivalenceSpec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$d/documents.parquet")
     .select(col("doc_id"), col("text"))

@@ -1,25 +1,15 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{BrCalendar, Num}
 import graft.functions._
 
 /** Expression ⇄ scalar parity (the reference's test category 3,
   * tests/tpf/test_expr_titulos.py) plus calendar/number properties.
   */
-class ParitySpec extends AnyFunSuite {
-
+class ParitySpec extends SparkSuite {
   private val rng = new scala.util.Random(42)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val epochLo = LocalDate.of(1995, 1, 1).toEpochDay.toInt
   private val epochHi = LocalDate.of(2035, 1, 1).toEpochDay.toInt

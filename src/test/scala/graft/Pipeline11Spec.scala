@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch-eleven/twelve semantics on constructed corpora: reconstructive
   * passage dedup must keep exactly one occurrence per distinct passage
@@ -12,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cohorts/funnel/anomaly/transitions must honor event ORDER, not mere
   * presence; JSON props parse schema-on-read with null-safe groups.
   */
-class Pipeline11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Pipeline11Spec extends SparkSuite {
   import spark.implicits._
 
   private def stage(rows: Seq[(Long, String, String)]): String = {

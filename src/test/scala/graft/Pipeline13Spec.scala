@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.TextOps
 
 /** Batch-thirteen semantics on constructed corpora: RRF fusion must rank
@@ -13,14 +11,7 @@ import graft.text.TextOps
   * computed type-1 empirical 90th percentile per source, with ties kept
   * whole (every doc AT the threshold survives).
   */
-class Pipeline13Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Pipeline13Spec extends SparkSuite {
   import spark.implicits._
 
   /** Stages documents + embeddings; vec i's embedding is a 64-dim unit

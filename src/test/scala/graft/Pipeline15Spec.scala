@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pipeline15
 
 /** Batch fifteen: PMI collocation arithmetic on a planted fixture (q114),
   * vocabulary-coverage breakpoints on a known distribution (q115), and
   * PageRank invariants on hand graphs (q116).
   */
-class Pipeline15Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline15Spec extends SparkSuite {
   private def wordsDf(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")

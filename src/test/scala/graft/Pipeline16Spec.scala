@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pipeline16
 
 /** Batch sixteen: triangle/closure arithmetic on hand graphs (q121), the
@@ -10,15 +8,7 @@ import graft.queries.Pipeline16
   * estimate accuracy + merge determinism (q123), and the exact-power-law
   * Zipf fixture (q124).
   */
-class Pipeline16Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline16Spec extends SparkSuite {
   private def wordsDf(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")

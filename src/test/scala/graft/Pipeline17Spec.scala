@@ -1,9 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pipeline17
 
 /** Batch seventeen: DDSketch bucket arithmetic + error guarantee on a
@@ -11,15 +9,7 @@ import graft.queries.Pipeline17
   * journeys (q132), and closed-form quartile phases on a score ladder
   * (q133).
   */
-class Pipeline17Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline17Spec extends SparkSuite {
   test("q131 core: cents ladder 1..1000 — exact type-1 quantiles and " +
     "sketch lower bounds with guaranteed relative error") {
     import spark.implicits._

@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pipeline18
 
 /** Batch eighteen: closed-form repetition fractions on planted word
   * ladders (q134) and the greedy MMR fold on a hand sim matrix (q135).
   */
-class Pipeline18Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline18Spec extends SparkSuite {
   test("q134 core: planted repetition — exact dup/top gram fractions") {
     import spark.implicits._
     val rows = Seq(

@@ -2,22 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pipeline20
 
 /** Batch twenty: closed-form Markov transition entropies on planted
   * deterministic vs uniform event flows (q144).
   */
-class Pipeline20Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline20Spec extends SparkSuite {
   private def ts(s: Long) = new Timestamp(s * 1000L)
 
   test("q144 core: deterministic flow has entropy 0 (and +0.0, not " +

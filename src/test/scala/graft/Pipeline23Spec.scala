@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch twenty-three: the deterministic Poisson-bootstrap weight
   * machinery behind q154/q155.
   */
-class Pipeline23Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline23Spec extends SparkSuite {
   test("bootstrap weights follow Poisson(1): mean ~ 1, bounded, " +
     "deterministic across partitionings") {
     // the same u52 derivation q154 uses, over 100k ids; the threshold

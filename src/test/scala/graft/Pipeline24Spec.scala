@@ -5,22 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch twenty-four: the Bloom FPR audit, label silhouette, winsorized
   * means, filter kappa and vocabulary drift. Value-exactness vs DuckDB
   * is the driver gate's job; these specs pin the closed-form planted
   * cases and the structural invariants each metric promises.
   */
-class Pipeline24Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline24Spec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("q159: the audit's accounting is internally consistent and the filter has no false negatives") {

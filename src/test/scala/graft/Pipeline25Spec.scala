@@ -5,23 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch twenty-five: decayed engagement, cluster edge density, LSH
   * tuning curve. Value-exactness vs DuckDB is the driver gate's job;
   * these pin the closed-form decay arithmetic and each table's
   * structural contract.
   */
-class Pipeline25Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline25Spec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("q164: planted half-life decay is exact powers of two") {

@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Batch twenty-six: shard Gini and vocabulary growth. Value-exactness
   * vs DuckDB is the driver gate's job; these pin the metric identities
   * and the curves' structural contracts.
   */
-class Pipeline26Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Pipeline26Spec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("q167: Gini matches the collected-totals identity; straggler >= 1") {

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Chunk, Percentiles}
 import graft.text.Pii
 
 /** PII scrubbing, overlapping chunking, and histogram-exact percentiles. */
-class Pipeline4Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Pipeline4Spec extends SparkSuite {
   import spark.implicits._
 
   test("Pii.scrub: sequential counts and token substitution") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Bloom
 import graft.ops.{Mix, Sample, Shard}
 import graft.sim.Similarity
@@ -11,14 +9,7 @@ import graft.sim.Similarity
   * Bloom membership, group centroids, and the double-array DotCosine
   * extension.
   */
-class Pipeline5Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Pipeline5Spec extends SparkSuite {
   import spark.implicits._
 
   // ------------------------------------------------------------------ Mix

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gates: the scale properties the engine claims
   * (no accidental cartesians, no per-query windows in top-k, partial
@@ -10,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * round they were built in. Asserted on the OPTIMIZED physical plans of
   * the declared driver queries at sf0.001.
   */
-class PlanShapeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanShapeSpec extends SparkSuite {
   private val d = "/root/testdata/sf0.001"
 
   private def plan(name: String): SparkPlan =

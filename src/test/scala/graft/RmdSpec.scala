@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Rmd
 
 /** RMD sheet-1.3 structurer: synthetic grid exercising every state of the
   * header classification machine; output shape matches the reference
   * golden's schema (periodo, grupo, subgrupo, titulo, valor).
   */
-class RmdSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RmdSpec extends SparkSuite {
   test("periodo parsing (pt-BR month codes)") {
     assert(Rmd.parsearPeriodo("Nov/06").contains(java.time.LocalDate.of(2006, 11, 1)))
     assert(Rmd.parsearPeriodo("Fev/24").contains(java.time.LocalDate.of(2024, 2, 1)))

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Pack, Sample}
 
 /** Deterministic stratified sampling + sequence packing operators. */
-class SamplePackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SamplePackSpec extends SparkSuite {
   import spark.implicits._
 
   test("hexThreshold edges and ordering") {

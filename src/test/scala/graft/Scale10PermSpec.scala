@@ -1,10 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.Scale10
+import graft.tools.Ladder
 
 /** The affine-cipher letter-permutation family behind the ×N scale
-  * inflations (`tools/Scale10.permutation`). The exponents in
+  * inflations (`tools/Ladder.permutation`). The exponents in
   * SCALE10/SCALE30 are only meaningful if the copies are genuinely
   * disjoint shards, so the disjointness properties are pinned here:
   * identity at k=0, PURE ROTATIONS for k ≤ 25 (pairwise composed maps
@@ -16,7 +16,7 @@ import graft.tools.Scale10
 class Scale10PermSpec extends AnyFunSuite {
 
   private def lowerMap(k: Int): String = {
-    val (_, to) = Scale10.permutation(k)
+    val (_, to) = Ladder.permutation(k)
     to.substring(0, 26)
   }
 
@@ -51,7 +51,7 @@ class Scale10PermSpec extends AnyFunSuite {
     }
   }
 
-  private def digitMap(k: Int): String = Scale10.digitPermutation(k)._2
+  private def digitMap(k: Int): String = Ladder.digitPermutation(k)._2
 
   test("digit family: identity at 0, all 40 members distinct bijections") {
     assert(digitMap(0) == "0123456789")
@@ -80,7 +80,7 @@ class Scale10PermSpec extends AnyFunSuite {
   }
 
   test("full translate source covers letters then digits, same length") {
-    val (from, to) = Scale10.permutation(7)
+    val (from, to) = Ladder.permutation(7)
     assert(from.length == to.length)
     assert(from.endsWith("0123456789"))
     assert(from.startsWith("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"))

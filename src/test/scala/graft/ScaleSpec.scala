@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Salt
 
 /** Scale-mechanics evidence: salted aggregation equals the plain groupBy
@@ -11,15 +9,7 @@ import graft.ops.Salt
   * exact operators, token-budget mixing stays exact under source skew,
   * and shard manifests are invariant to physical input layout.
   */
-class ScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ScaleSpec extends SparkSuite {
   test("salted aggregation == plain groupBy on a skewed key") {
     import spark.implicits._
     // 90% of rows share one key — the classic hot-key shape

@@ -183,6 +183,39 @@ class ScheduleIdentitySpec extends AnyFunSuite {
     assert(n > 33000000L)
   }
 
+  test("table ehDiaUtil, deslocar and gerar equal the binary-searched holiday walk") {
+    def dia(d: Int) = LocalDate.ofEpochDay(d.toLong)
+    var erros = List.empty[String]
+    var n = 0L
+    def erro(msg: => String): Unit = if (erros.length < 10) erros ::= msg
+    val ini = LocalDate.of(1985, 1, 1).toEpochDay.toInt
+    val fim = LocalDate.of(2110, 12, 31).toEpochDay.toInt
+    var d = ini
+    while (d <= fim) {
+      n += 1
+      if (BrCalendar.ehDiaUtil(d) != Referencia.ehDiaUtil(d)) erro(s"ehDiaUtil(${dia(d)})")
+      for (k <- -30 to 30; frente <- Seq(true, false)) {
+        n += 1
+        val (got, want) = (BrCalendar.deslocar(d, k, frente), Referencia.deslocar(d, k, frente))
+        if (got != want) erro(s"deslocar(${dia(d)}, $k, $frente) = ${dia(got)}, want ${dia(want)}")
+      }
+      d += 1
+    }
+    // the regime switch and both table edges, for every closure and regime
+    val marcos = Seq(BrCalendar.TransitionEpochDay, BrCalendar.InicioTabela, BrCalendar.FimTabela)
+    for (m <- marcos; a <- -20 to 20 by 5; b <- Seq(0, 1, 7, 40);
+         closed <- Seq("both", "left", "right", "none");
+         regime <- Seq("antigo", "novo", "inferir")) {
+      n += 1
+      val (s, e) = (dia(m + a), dia(m + a + b))
+      val got = BrCalendar.gerar(s, e, closed, regime)
+      val want = Referencia.gerar(s, e, closed, regime)
+      if (got != want) erro(s"gerar($s, $e, $closed, $regime) = $got, want $want")
+    }
+    assert(erros.isEmpty, erros.reverse.mkString("\n"))
+    assert(n > 5600000L)
+  }
+
   test("flows and the tuple schedule match the reference's sorted schedule") {
     for (seed <- Seeds.take(1); dia <- portfolio(seed); i <- dia.instrumentos) {
       assert(NtnF.fluxosCaixa(dia.liq, i.venc) ==
@@ -342,6 +375,41 @@ object ScheduleIdentitySpec {
 
     def contar(start: LocalDate, end: LocalDate): Long =
       contar(start.toEpochDay.toInt, end.toEpochDay.toInt)
+
+    private def ehUtilSob(d: Int, hol: Array[Int]): Boolean =
+      BrCalendar.isWeekday(d) && java.util.Arrays.binarySearch(hol, d) < 0
+
+    private def feriados(ancora: Int): Array[Int] =
+      if (ancora < BrCalendar.TransitionEpochDay) BrCalendar.holidaysOld else BrCalendar.holidaysNew
+
+    /** Business day under its own date's regime: weekday, not a holiday. */
+    def ehDiaUtil(d: Int): Boolean = ehUtilSob(d, feriados(d))
+
+    /** Roll, then walk n business days, one binary search per day, under
+      * the regime of `d0`.
+      */
+    def deslocar(d0: Int, n: Int, rollForward: Boolean): Int = {
+      val hol = feriados(d0)
+      var d = d0
+      while (!ehUtilSob(d, hol)) d += (if (rollForward) 1 else -1)
+      for (_ <- 0 until math.abs(n)) {
+        d += Integer.signum(n)
+        while (!ehUtilSob(d, hol)) d += Integer.signum(n)
+      }
+      d
+    }
+
+    def gerar(start: LocalDate, end: LocalDate, closed: String, regime: String): Seq[LocalDate] = {
+      val (s, e) = (start.toEpochDay.toInt, end.toEpochDay.toInt)
+      val hol = regime match {
+        case "antigo" => BrCalendar.holidaysOld
+        case "novo" => BrCalendar.holidaysNew
+        case _ => feriados(s)
+      }
+      val lo = if (closed == "both" || closed == "left") s else s + 1
+      val hi = if (closed == "both" || closed == "right") e else e - 1
+      (lo to hi).filter(ehUtilSob(_, hol)).map(d => LocalDate.ofEpochDay(d.toLong))
+    }
 
     /** Bracket search and bisection evaluating f at every point. */
     def encontrarRaiz(f: Double => Double): Double = {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.DedupOps
 import graft.tools.SimhashRecall
@@ -20,15 +18,7 @@ import graft.tools.SimhashRecall
   * silently invert. The full measured curve is the committed
   * `SIMHASH_RECALL.json` artifact.
   */
-class SimhashRecallSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SimhashRecallSpec extends SparkSuite {
   private val NBase = 150
 
   private lazy val (docs, planted) = {

@@ -1,20 +1,10 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{DerivativosIntradia, SmallFeeds}
 
-class SmallFeedsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SmallFeedsSpec extends SparkSuite {
   test("derivativos intradia JSON fixtures parse with dotted paths") {
     for (c <- Seq("DOL", "DAP", "IND", "FRO")) {
       val df = DerivativosIntradia.ler(spark,

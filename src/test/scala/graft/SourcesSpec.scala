@@ -1,21 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{AnbimaTaxas, SecundarioMensal}
 
 /** Reader correctness vs the reference's own golden fixtures
   * (/root/reference/tests/... read-only).
   */
-class SourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SourcesSpec extends SparkSuite {
   private val tpfData = "/root/reference/tests/tpf/data"
 
   private def assertFrameEqual(got: DataFrame, want: DataFrame): Unit = {

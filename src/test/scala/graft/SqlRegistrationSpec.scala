@@ -1,18 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The custom expressions are usable from plain SQL after registration. */
-class SqlRegistrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SqlRegistrationSpec extends SparkSuite {
   test("bday_count/is_bday/add_bdays/round_even from spark.sql") {
     graft.functions.registerSql(spark)
     val row = spark.sql("""

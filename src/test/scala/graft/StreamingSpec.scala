@@ -1,23 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
 
 /** Streaming ⇄ batch equivalence: the streaming operators must produce the
   * same answers as their batch twins (q40/q41) over the same events data.
   */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingSpec extends SparkSuite {
   private def stageDir(): String = {
     val dir = Files.createTempDirectory("events_stream")
     Files.copy(Paths.get("/root/testdata/sf0.001/events.parquet"),

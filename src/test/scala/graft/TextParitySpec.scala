@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.TextOps
 
 /** Pins the one-pass native TextStats expression to the regex-Column
@@ -11,15 +9,7 @@ import graft.text.TextOps
   * whitespace, tabs/newlines, digits and underscores at word boundaries,
   * CJK, punctuation runs, accented words).
   */
-class TextParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TextParitySpec extends SparkSuite {
   private val edgeCases = Seq(
     "",
     " ",

@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sim.TopKByScore
 
 /** Property check of the bounded top-k aggregate against the windowed
   * row_number reference on random data (ties, duplicate scores, negative
   * values, groups smaller than k).
   */
-class TopKAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TopKAggSpec extends SparkSuite {
   test("TopKByScore == row_number window top-k on random groups") {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.datasets.{Futuro, Tpf}
 import graft.sources.AnbimaTaxas
 
@@ -10,15 +8,7 @@ import graft.sources.AnbimaTaxas
   * rates (2026-02-06) enriched with duration/DV01 and DI rates
   * interpolated from the 2026-01-12 boletim curve.
   */
-class TpfSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TpfSpec extends SparkSuite {
   private lazy val tpfFull = AnbimaTaxas.ler(spark,
     "/root/reference/tests/tpf/data/tpf_20260206.txt")
   private lazy val di1 = Futuro.enriquecer(

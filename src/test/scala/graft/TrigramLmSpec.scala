@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.TrigramLm
 
 /** Character-trigram LM scoring: hand-computed smoothing arithmetic,
   * the fluent-vs-gibberish ordering the filter exists for, and the
   * short-document edge.
   */
-class TrigramLmSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrigramLmSpec extends SparkSuite {
   import spark.implicits._
 
   test("hand-computed add-one smoothing on a two-doc corpus") {

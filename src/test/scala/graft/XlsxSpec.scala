@@ -2,8 +2,6 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.bonds.Vna
 import graft.sources.{AnbimaIndicadores, Rmd, Xlsx}
 
@@ -102,16 +100,8 @@ object XlsxFixture {
   }
 }
 
-class XlsxSpec extends AnyFunSuite {
-
+class XlsxSpec extends SparkSuite {
   import XlsxFixture.{build, num, str}
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("reader: sheet names, sparse cells, shared strings, cell refs") {
     val bytes = build(Seq(
