@@ -60,7 +60,7 @@ object Bonds {
   }
 
   /** Epoch day of payment k, counted back from the maturity `fim`. */
-  private def diaPagamento(fim: LocalDate, intervaloMeses: Int, k: Int): Long =
+  private[bonds] def diaPagamento(fim: LocalDate, intervaloMeses: Int, k: Int): Long =
     diaMesesAntes(fim.getYear, fim.getMonthValue, fim.getDayOfMonth, intervaloMeses * k)
 
   /** Number of payment dates after the epoch day `inicio`. Like the

@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions.udf
   * Semantics: 252 business days/year; du below the first vertex -> first
   * rate; above the last -> NaN unless `extrapolar`; exact vertex ->
   * passthrough; negative du -> NaN.
+  *
+  * A flat-forward curve holds each vertex's growth factor
+  * (1 + tx)^(du/252), computed once at construction with the expression a
+  * lookup used to evaluate for both of its bracketing vertices, so a lookup
+  * calls `Math.pow` twice instead of four times and returns the same double.
   */
 final class Interpolador(
     diasUteis: Seq[Long],
@@ -22,15 +27,21 @@ final class Interpolador(
 
   require(metodo == "flat_forward" || metodo == "linear", s"metodo: $metodo")
 
-  // cast + drop null/NaN + dedup keep-last + sort, like the reference ctor.
-  private val (dus: Array[Long], txs: Array[Double]) = {
-    val cleaned = diasUteis.zip(taxas)
-      .filterNot { case (_, t) => t.isNaN }
-    val lastPerDu = scala.collection.mutable.LinkedHashMap[Long, Double]()
-    cleaned.foreach { case (d, t) => lastPerDu(d) = t }
-    val sorted = lastPerDu.toArray.sortBy(_._1)
-    (sorted.map(_._1), sorted.map(_._2))
-  }
+  // drop NaN + dedup keep-last + sort, like the reference ctor.
+  private val (dus: Array[Long], txs: Array[Double]) = Interpolador.limpar(diasUteis, taxas)
+
+  /** (1 + txs(k))^(dus(k)/252) per vertex; empty for a linear curve. */
+  private val fatores: Array[Double] =
+    if (metodo == "linear") Array.emptyDoubleArray
+    else {
+      val f = new Array[Double](dus.length)
+      var k = 0
+      while (k < f.length) {
+        f(k) = math.pow(1 + txs(k), dus(k) / 252.0)
+        k += 1
+      }
+      f
+    }
 
   def size: Int = dus.length
 
@@ -41,13 +52,12 @@ final class Interpolador(
   }
 
   private def flatForward(du: Long, k: Int): Double = {
-    val txJ = txs(k - 1); val auJ = dus(k - 1) / 252.0
-    val txK = txs(k); val auK = dus(k) / 252.0
+    val auJ = dus(k - 1) / 252.0
+    val auK = dus(k) / 252.0
     val au = du / 252.0
-    val faJ = math.pow(1 + txJ, auJ)
-    val faK = math.pow(1 + txK, auK)
+    val faJ = fatores(k - 1)
     val ft = (au - auJ) / (auK - auJ)
-    math.pow(faJ * math.pow(faK / faJ, ft), 1 / au) - 1
+    math.pow(faJ * math.pow(fatores(k) / faJ, ft), 1 / au) - 1
   }
 
   /** Scalar interpolation; NaN for negative du or beyond the long end with
@@ -79,5 +89,43 @@ final class Interpolador(
         if (v.isNaN) None else Some(v)
       })
     f(du.cast("long"))
+  }
+}
+
+object Interpolador {
+
+  /** The vertices of the pairs (du, rate), as far as the shorter input
+    * goes: NaN rates dropped, the last rate kept for a repeated du, sorted
+    * by du.
+    */
+  private def limpar(diasUteis: Seq[Long], taxas: Seq[Double]): (Array[Long], Array[Double]) = {
+    val m = math.min(diasUteis.length, taxas.length)
+    val ds = new Array[Long](m)
+    val ts = new Array[Double](m)
+    val (itD, itT) = (diasUteis.iterator, taxas.iterator)
+    var n = 0
+    while (itD.hasNext && itT.hasNext) {
+      val d = itD.next()
+      val t = itT.next()
+      if (!t.isNaN) { ds(n) = d; ts(n) = t; n += 1 }
+    }
+    // the distinct dus, sorted
+    val dus = java.util.Arrays.copyOf(ds, n)
+    java.util.Arrays.sort(dus)
+    var u = 0
+    var k = 0
+    while (k < n) {
+      if (u == 0 || dus(k) != dus(u - 1)) { dus(u) = dus(k); u += 1 }
+      k += 1
+    }
+    val distintos = java.util.Arrays.copyOf(dus, u)
+    // in input order, so that a later rate overwrites an earlier one
+    val txs = new Array[Double](u)
+    k = 0
+    while (k < n) {
+      txs(java.util.Arrays.binarySearch(distintos, ds(k))) = ts(k)
+      k += 1
+    }
+    (distintos, txs)
   }
 }

@@ -13,8 +13,9 @@ import graft.curve.Interpolador
   * the schedule-per-evaluation formulas they replaced.
   * [[ScheduleIdentitySpec.Referencia]] keeps those formulas as the reference
   * implementation, with its own BigDecimal-only truncation, `math.pow`
-  * rounding scale, bisection that evaluates every point and business-day
-  * count (weekdays minus binary-searched holidays).
+  * rounding scale, bisection that evaluates every point, business-day
+  * count (weekdays minus binary-searched holidays) and interpolation (the
+  * flat-forward formula with its four `math.pow` calls per lookup).
   */
 class ScheduleIdentitySpec extends AnyFunSuite {
   import ScheduleIdentitySpec._
@@ -96,6 +97,36 @@ class ScheduleIdentitySpec extends AnyFunSuite {
       }
     }
     cmp.check(Seeds.length * Dias * 2L)
+  }
+
+  test("interpolar is bit-identical on every portfolio day's curves, extrapolated or not") {
+    val cmp = new Comparador
+    for (seed <- Seeds; dia <- portfolio(seed)) {
+      val c = curvaPre(dia.liq, seed)
+      val curvas = Seq(
+        "NTN-B" -> (dia.bootVencs, dia.bootTaxas),
+        "LTN" -> (c.ltnVencs, c.ltnTaxas),
+        "NTN-F" -> (c.ntnfVencs, c.ntnfTaxas))
+      for ((nome, (vencs, taxas)) <- curvas) {
+        val dus = vencs.map(v => Referencia.contar(dia.liq, v))
+        // the same vertices shuffled, with a NaN rate and a repeated du
+        // whose last rate is kept
+        val rng = new Random(seed + dia.liq.toEpochDay)
+        val (dusSujos, taxasSujas) = rng.shuffle(dus.zip(taxas) ++ Seq(
+          dus.head -> Double.NaN, dus.last + 3 -> 0.2, dus.last + 3 -> taxas.last)).unzip
+        for ((ds, ts, limpa) <- Seq((dus, taxas, true), (dusSujos, taxasSujas, false));
+             metodo <- Seq("flat_forward", "linear"); extrapolar <- Seq(false, true)) {
+          val novo = new Interpolador(ds, ts, metodo, extrapolar)
+          val ref = new Referencia.Interpolador(ds, ts, metodo, extrapolar)
+          for (du <- -3L to ds.max + 5)
+            cmp(s"seed $seed ${dia.liq} $nome limpa=$limpa $metodo extrapolar=$extrapolar du=$du",
+              novo.interpolar(du), ref.interpolar(du))
+        }
+      }
+    }
+    // at least 3 curves, 2 vertex lists, 2 methods, 2 extrapolations and
+    // the 9 dus from -3 to 5 per day
+    cmp.check(Seeds.length * Dias * 3 * 2 * 2 * 2 * 9L)
   }
 
   test("rate solves are bit-identical on adversarial inputs") {
@@ -596,6 +627,50 @@ object ScheduleIdentitySpec {
     def lftTaxa(liq: LocalDate, venc: LocalDate, vna: Double, pu0: Double): Double = {
       if (pu0 <= 0) return Double.NaN
       truncar(encontrarRaiz(t => lftPu(vna, lftCotacao(liq, venc, t)) - pu0), 8)
+    }
+
+    /** The interpolation operator: NaN rates dropped, the last rate kept
+      * for a repeated du, sorted by du; flat-forward evaluates both
+      * bracketing vertices' growth factors per lookup.
+      */
+    final class Interpolador(diasUteis: Seq[Long], taxas: Seq[Double], metodo: String,
+                             extrapolar: Boolean = false) {
+      private val (dus: Array[Long], txs: Array[Double]) = {
+        val cleaned = diasUteis.zip(taxas)
+          .filterNot { case (_, t) => t.isNaN }
+        val lastPerDu = scala.collection.mutable.LinkedHashMap[Long, Double]()
+        cleaned.foreach { case (d, t) => lastPerDu(d) = t }
+        val sorted = lastPerDu.toArray.sortBy(_._1)
+        (sorted.map(_._1), sorted.map(_._2))
+      }
+
+      private def linear(du: Long, k: Int): Double = {
+        val (duJ, txJ) = (dus(k - 1), txs(k - 1))
+        val (duK, txK) = (dus(k), txs(k))
+        txJ + (du - duJ).toDouble * (txK - txJ) / (duK - duJ).toDouble
+      }
+
+      private def flatForward(du: Long, k: Int): Double = {
+        val txJ = txs(k - 1); val auJ = dus(k - 1) / 252.0
+        val txK = txs(k); val auK = dus(k) / 252.0
+        val au = du / 252.0
+        val faJ = math.pow(1 + txJ, auJ)
+        val faK = math.pow(1 + txK, auK)
+        val ft = (au - auJ) / (auK - auJ)
+        math.pow(faJ * math.pow(faK / faJ, ft), 1 / au) - 1
+      }
+
+      def interpolar(du: Long): Double = {
+        if (du < 0 || dus.isEmpty) return Double.NaN
+        if (du < dus.head) return txs.head
+        if (du > dus.last) return if (extrapolar) txs.last else Double.NaN
+        val i = java.util.Arrays.binarySearch(dus, du)
+        if (i >= 0) return txs(i)
+        val k = -(i + 1)
+        if (metodo == "linear") linear(du, k) else flatForward(du, k)
+      }
+
+      def apply(du: Long): Double = interpolar(du)
     }
 
     def ntnbTaxasZero(liq: LocalDate, vencimentos: Seq[LocalDate], taxas: Seq[Double],
