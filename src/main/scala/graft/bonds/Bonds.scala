@@ -60,7 +60,7 @@ object Bonds {
   }
 
   /** Epoch day of payment k, counted back from the maturity `fim`. */
-  private[bonds] def diaPagamento(fim: LocalDate, intervaloMeses: Int, k: Int): Long =
+  private def diaPagamento(fim: LocalDate, intervaloMeses: Int, k: Int): Long =
     diaMesesAntes(fim.getYear, fim.getMonthValue, fim.getDayOfMonth, intervaloMeses * k)
 
   /** Number of payment dates after the epoch day `inicio`. Like the
@@ -80,9 +80,26 @@ object Bonds {
   def gerarDatasPagamento(inicio: LocalDate, fim: LocalDate,
                           intervaloMeses: Int = 6): Seq[LocalDate] = {
     require(intervaloMeses > 0)
-    val n = contarPagamentos(inicio.toEpochDay, fim, intervaloMeses)
-    IndexedSeq.tabulate(n)(i =>
-      LocalDate.ofEpochDay(diaPagamento(fim, intervaloMeses, n - 1 - i)))
+    diasPagamento(inicio.toEpochDay, fim, intervaloMeses).toIndexedSeq.map(LocalDate.ofEpochDay)
+  }
+
+  /** Epoch days of the payment dates of [[gerarDatasPagamento]], in date
+    * order.
+    */
+  private[bonds] def diasPagamento(inicio: Long, fim: LocalDate, intervaloMeses: Int): Array[Long] = {
+    val n = contarPagamentos(inicio, fim, intervaloMeses)
+    val dias = new Array[Long](n)
+    var i = 0
+    while (i < n) { dias(i) = diaPagamento(fim, intervaloMeses, n - 1 - i); i += 1 }
+    dias
+  }
+
+  /** Business days from the epoch day `liq` to each epoch day of `dias`. */
+  private[bonds] def diasUteis(liq: Long, dias: Array[Long]): Array[Int] = {
+    val du = new Array[Int](dias.length)
+    var i = 0
+    while (i < du.length) { du(i) = BrCalendar.contar(liq.toInt, dias(i).toInt).toInt; i += 1 }
+    du
   }
 
   /** (paymentDate, amount) flows of the semiannual schedule: coupon every
@@ -99,14 +116,7 @@ object Bonds {
   private[bonds] def cronograma(liquidacao: LocalDate, vencimento: LocalDate,
                                 valorCupom: Double, valorFinal: Double): Cronograma = {
     val liq = liquidacao.toEpochDay
-    val n = contarPagamentos(liq, vencimento, 6)
-    val dus = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      dus(i) = BrCalendar.contar(liq.toInt, diaPagamento(vencimento, 6, n - 1 - i).toInt).toInt
-      i += 1
-    }
-    new Cronograma(dus, valorCupom, valorFinal)
+    new Cronograma(diasUteis(liq, diasPagamento(liq, vencimento, 6)), valorCupom, valorFinal)
   }
 
   // ---------------------------------------------------------- PV and roots

@@ -54,9 +54,9 @@ object Bootstrap {
     // The semiannual payment dates of grid(i) are grid(i-2), grid(i-4), ...
     // (subtrairMeses keeps the day), so every schedule below reads the
     // grid by index.
-    val grid = diasPagamento(liq, LocalDate.ofEpochDay(vencs(m - 1)), 3)
+    val grid = Bonds.diasPagamento(l, LocalDate.ofEpochDay(vencs(m - 1)), 3)
     val n = grid.length
-    val dias = contar(l, grid)
+    val dias = Bonds.diasUteis(l, grid)
     val grade = new Grade(dias, 2, NtnB.ValorCupom, NtnB.ValorFinal, 12)
     val zeros = new Array[Double](n)
     // PV of grid(i)'s semiannual coupons before it, at the zero rates
@@ -100,9 +100,9 @@ object Bootstrap {
     // point; each one past the LTN range is solved as a SYNTHETIC NTN-F
     // with its interpolated IRR (ntnf.py:440-505), whose coupons fall on
     // the earlier grid points.
-    val grid = diasPagamento(liq, ultimoNtnf, 6)
+    val grid = Bonds.diasPagamento(l, ultimoNtnf, 6)
     val n = grid.length
-    val dias = contar(l, grid)
+    val dias = Bonds.diasUteis(l, grid)
     val grade = new Grade(dias, 1, NtnF.ValorCupom, NtnF.ValorFinal, 9)
     val spot = new Array[Double](n)
     // PV of the coupons before grid(i) at the spot rates already solved
@@ -127,24 +127,6 @@ object Bootstrap {
     vertices(grid, dias, spot, if (incluirCupons) null else vencsNtnf)
   }
 
-  /** Epoch days of the payment dates after `liq` up to `fim`, every
-    * `intervaloMeses` months back from `fim`, in date order: the dates of
-    * [[Bonds.gerarDatasPagamento]].
-    */
-  private def diasPagamento(liq: LocalDate, fim: LocalDate, intervaloMeses: Int): Array[Long] = {
-    // payment k falls meses - k·intervaloMeses months after liq's month, so
-    // the count can start one payment short of meses / intervaloMeses; with
-    // the fill below, every date up to the first on or before liq is still
-    // built, so a day past a month's end throws as in gerarDatasPagamento
-    val meses = (fim.getYear - liq.getYear) * 12 + fim.getMonthValue - liq.getMonthValue
-    var n = math.max(0, meses / intervaloMeses - 1)
-    while (Bonds.diaPagamento(fim, intervaloMeses, n) > liq.toEpochDay) n += 1
-    val dias = new Array[Long](n)
-    var i = 0
-    while (i < n) { dias(i) = Bonds.diaPagamento(fim, intervaloMeses, n - 1 - i); i += 1 }
-    dias
-  }
-
   private def diasEpoca(datas: Seq[LocalDate]): Array[Long] = {
     val dias = new Array[Long](datas.length)
     var i = 0
@@ -160,14 +142,6 @@ object Bootstrap {
     var k = 0
     while (k < dus.length) { dus(k) = BrCalendar.contar(l, vencimentos(k).toInt); k += 1 }
     new Interpolador(ArraySeq.unsafeWrapArray(dus), taxas, "flat_forward")
-  }
-
-  /** Business days from the epoch day `l` to each epoch day of `dias`. */
-  private def contar(l: Int, dias: Array[Long]): Array[Int] = {
-    val du = new Array[Int](dias.length)
-    var i = 0
-    while (i < du.length) { du(i) = BrCalendar.contar(l, dias(i).toInt).toInt; i += 1 }
-    du
   }
 
   /** The vertices of the grid points, or, with `vencimentos` (sorted epoch

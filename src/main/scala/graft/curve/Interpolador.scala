@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions.udf
   * passthrough; negative du -> NaN.
   *
   * A flat-forward curve holds each vertex's growth factor
-  * (1 + tx)^(du/252), computed once at construction with the expression a
-  * lookup used to evaluate for both of its bracketing vertices, so a lookup
-  * calls `Math.pow` twice instead of four times and returns the same double.
+  * (1 + tx)^(du/252), computed once at construction, so a lookup calls
+  * `Math.pow` twice. The factor is the expression a lookup would evaluate
+  * for each bracketing vertex, so the result is the same double.
   */
 final class Interpolador(
     diasUteis: Seq[Long],
@@ -27,8 +27,15 @@ final class Interpolador(
 
   require(metodo == "flat_forward" || metodo == "linear", s"metodo: $metodo")
 
-  // drop NaN + dedup keep-last + sort, like the reference ctor.
-  private val (dus: Array[Long], txs: Array[Double]) = Interpolador.limpar(diasUteis, taxas)
+  // cast + drop null/NaN + dedup keep-last + sort, like the reference ctor.
+  private val (dus: Array[Long], txs: Array[Double]) = {
+    val cleaned = diasUteis.zip(taxas)
+      .filterNot { case (_, t) => t.isNaN }
+    val lastPerDu = scala.collection.mutable.LinkedHashMap[Long, Double]()
+    cleaned.foreach { case (d, t) => lastPerDu(d) = t }
+    val sorted = lastPerDu.toArray.sortBy(_._1)
+    (sorted.map(_._1), sorted.map(_._2))
+  }
 
   /** (1 + txs(k))^(dus(k)/252) per vertex; empty for a linear curve. */
   private val fatores: Array[Double] =
@@ -89,43 +96,5 @@ final class Interpolador(
         if (v.isNaN) None else Some(v)
       })
     f(du.cast("long"))
-  }
-}
-
-object Interpolador {
-
-  /** The vertices of the pairs (du, rate), as far as the shorter input
-    * goes: NaN rates dropped, the last rate kept for a repeated du, sorted
-    * by du.
-    */
-  private def limpar(diasUteis: Seq[Long], taxas: Seq[Double]): (Array[Long], Array[Double]) = {
-    val m = math.min(diasUteis.length, taxas.length)
-    val ds = new Array[Long](m)
-    val ts = new Array[Double](m)
-    val (itD, itT) = (diasUteis.iterator, taxas.iterator)
-    var n = 0
-    while (itD.hasNext && itT.hasNext) {
-      val d = itD.next()
-      val t = itT.next()
-      if (!t.isNaN) { ds(n) = d; ts(n) = t; n += 1 }
-    }
-    // the distinct dus, sorted
-    val dus = java.util.Arrays.copyOf(ds, n)
-    java.util.Arrays.sort(dus)
-    var u = 0
-    var k = 0
-    while (k < n) {
-      if (u == 0 || dus(k) != dus(u - 1)) { dus(u) = dus(k); u += 1 }
-      k += 1
-    }
-    val distintos = java.util.Arrays.copyOf(dus, u)
-    // in input order, so that a later rate overwrites an earlier one
-    val txs = new Array[Double](u)
-    k = 0
-    while (k < n) {
-      txs(java.util.Arrays.binarySearch(distintos, ds(k))) = ts(k)
-      k += 1
-    }
-    (distintos, txs)
   }
 }

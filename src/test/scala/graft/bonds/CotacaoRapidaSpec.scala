@@ -20,9 +20,8 @@ class CotacaoRapidaSpec extends AnyFunSuite {
     Bonds.gerarDatasPagamento(liq, fim, meses).map(d => BrCalendar.contar(liq, d).toInt).toArray
 
   /** A grid to a maturity on (mes, dia) and its synthetic bond; at most
-    * `recuos` of the random rates
-    * may fall back (the margin is about 7·10^-11 for NTN-B and 2.4·10^-8
-    * for NTN-F, against a 10^-6 grid).
+    * `recuos` of the random rates may fall back (the margin is at most
+    * 6·10^-11 for NTN-B and 2.5·10^-8 for NTN-F, against a 10^-6 grid).
     */
   private final case class Caso(nome: String, passo: Int, cupom: Double,
                                 valorFinal: Double, casas: Int, meses: Int, anos: Int,
