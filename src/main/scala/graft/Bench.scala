@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.control.NonFatal
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Queries are materialized through the noop sink so the full plan
@@ -22,7 +20,7 @@ object Bench {
     graft.queries.Artifacts.clearProducedBy(name)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Measure.sfDir
     val spark = Sessions.local()
 
     // the per-repeat producer clears below only empty the in-JVM memo
@@ -30,11 +28,11 @@ object Bench {
     // re-serve the persisted parquet and q93/q43/q94 would silently
     // measure a store READ instead of the production computation. An
     // inherited session conf must not be able to corrupt board
-    // semantics: store benchmarking is a separate, labeled protocol
-    // (graft.tools.BenchStore).
+    // semantics: store-mode numbers are a separate, labeled protocol
+    // (BENCH_STORE.json, REPRO.md).
     require(graft.queries.ArtifactStore.dirOf(spark).isEmpty,
       s"Bench measures production computation; ${graft.queries.ArtifactStore.DirConf} " +
-        "must be unset (use graft.tools.BenchStore for store-mode numbers)")
+        "must be unset (store-mode numbers are a separate protocol, see REPRO.md)")
 
     // absorb JVM/codegen/session warmup so per-query numbers reflect
     // steady-state execution rather than first-query startup. The
@@ -43,47 +41,29 @@ object Bench {
     // happened to compile them decided whether q50-family queries
     // measured 4 s or 40 s run-to-run, so warm that path explicitly.
     val q50 = "q50_neardup_clusters"
-    val warmups = SparkEntry.queries.take(1).toSeq ++
-      SparkEntry.queries.get(q50).map(q50 -> _)
-    warmups.foreach { case (name, fn) =>
-      try Measure.noop(fn(spark, sfDir))
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] warmup $name failed: $e")
-      }
+    val queries = SparkEntry.queries
+    (queries.keys.take(1).toSeq ++ Seq(q50).filter(queries.contains)).foreach { name =>
+      Measure.attempt("bench", s"warmup $name")(Measure.noop(queries(name)(spark, sfDir)))
     }
 
     // optional comma-separated name-prefix filter for targeted local runs
     // (e.g. SPARK_GRAFT_ONLY=q50,q32); absent = full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith))
-    }
+    val only = Measure.only()
     // repeat-min: the build host has documented multi-minute ~10x
     // slowdown windows that slide across the query list (REPRO.md) —
     // two rounds running the official bench ONCE per query measured the
     // host, not the code. The min over 3 runs is jitter-immune unless a
     // window outlasts all three, which the isolated re-run protocol in
     // REPRO.md then catches.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
+    val repeats = Measure.repeats(3)
     // a repeat that throws ends its query: the query's status is failed
     // and none of its times count
-    val outcomes = selected.map { case (name, fn) =>
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var failed = false
-      for (r <- 1 to repeats if !failed) {
-        clearProducerMemo(name)
-        System.err.println(s"[bench] running $name ($r/$repeats)")
-        try times += Measure.seconds(Measure.noop(fn(spark, sfDir)))
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: $e")
-          failed = true
-        }
-      }
-      (name, times.toSeq, failed)
+    val outcomes = Measure.select(only).map { name =>
+      name -> Measure.repeat("bench", name, repeats)(clearProducerMemo(name))(
+        Measure.noop(queries(name)(spark, sfDir)))
     }
-    val results = outcomes.collect { case (n, t, false) => n -> t }
-    val failedJson = outcomes.collect { case (n, _, true) => "\"" + n + "\"" }
+    val results = outcomes.collect { case (n, Some(t)) => n -> t }
+    val failedJson = outcomes.collect { case (n, None) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
     import Measure.num
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v.min) }

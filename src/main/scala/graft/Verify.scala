@@ -14,17 +14,13 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name-prefix filter for targeted local runs
     // (same contract as Bench's SPARK_GRAFT_ONLY); the driver gate sets no
-    // filter and dumps everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // filter and dumps everything. A failed query is logged, writes
+    // nothing and is named in the last stderr line.
+    val queries = SparkEntry.queries
+    val names = Measure.select(Measure.only())
+    val failed = names.filterNot { name =>
+      Measure.attempt("verify", name)(queries(name)(spark, sfDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -42,5 +38,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(s"[verify] ${failed.size} of ${names.size} queries failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", " ", "")))
   }
 }

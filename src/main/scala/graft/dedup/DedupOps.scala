@@ -226,8 +226,8 @@ object DedupOps {
 
   /** The Hamming radius paired with [[adaptiveSimhashWidth]] — 3 above
     * the 16-bit floor, 2 at it. MEASURED, not asserted (judge directive
-    * r10-#4, `SIMHASH_RECALL.json` — deterministic planted fixture,
-    * 2000 graded pairs, `tools/SimhashRecall`): widening at a FIXED
+    * r10-#4, `SIMHASH_RECALL.json` — SimhashRecallSpec's deterministic
+    * planted fixture, 2000 graded pairs): widening at a FIXED
     * radius 2 loses even single-word-edit near-dups (grade-1 recall
     * 0.926 at w16 → 0.876 at w21 → 0.710 at w31) because each bit's
     * majority vote flips independently, so expected flipped bits grow
@@ -954,8 +954,6 @@ object DedupOps {
         labels = next.select(col("id"), col("cluster_id"))
         converged = changed == 0
         iter += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] round $iter changed=$changed")
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds — " +

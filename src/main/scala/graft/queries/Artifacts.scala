@@ -120,7 +120,6 @@ object Artifacts {
   val Bm25Scores = declare("bm25_scores", Lazy, Q93)
   // LmMemo, BpeMemo
   val TrigramCounts = declare("trigram_counts", Lazy)
-  val TrigramModel = declare("trigram_model", Value)
   val TrigramModelCollected = declare("trigram_model_collected", Value)
   val BpeVocab = declare("bpe_vocab", Lazy)
 

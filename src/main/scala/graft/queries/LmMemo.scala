@@ -25,14 +25,6 @@ object LmMemo {
       Tables.documents(s, d).select(col("doc_id"), col("text")),
       "doc_id", "text"))
 
-  /** The ONE-ROW broadcastable model ([[TrigramLm.modelFrame]]: logp map
-    * + unseen default) over [[trigramCounts]] — the probe payload both
-    * q87 and the streaming LM admission score against.
-    */
-  def trigramModel(s: SparkSession, d: String): DataFrame =
-    Artifacts.TrigramModel(s, d)(
-      TrigramLm.modelFrame(trigramCounts(s, d)).localCheckpoint())
-
   /** Driver-array form of the model — the [[TrigramLmScore]] expression
     * payload q87 scores with (bounded by the trigram space; see
     * [[TrigramLm.collectModel]]).

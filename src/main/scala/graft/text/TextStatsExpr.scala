@@ -189,14 +189,6 @@ object TextStats {
   @inline def isAsciiSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 0x0b || c == '\f' || c == '\r'
 
-  /** Java regex \w (no UNICODE flag): [A-Za-z0-9_]. NOTE: \w is ASCII but
-    * \b is NOT — the stopword tokenizer must use the \b semantics (see
-    * the class doc), not this predicate.
-    */
-  @inline def isWordChar(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-      (c >= '0' && c <= '9') || c == '_'
-
   // Stopword alternations of TextOps.{En,De,Es,Fr}Pat as token sets.
   val En: java.util.Set[String] = java.util.Set.of(
     "the", "and", "of", "to", "is", "in", "that", "it", "with", "for")

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.{Bench, Measure, SparkEntry}
 import graft.Measure.num
-import scala.util.control.NonFatal
 
 /** Automates REPRO.md's adjudication recipe (judge directive r9-#1,
   * "make the bench artifact self-evidencing"): diff a close-run board
@@ -19,9 +18,10 @@ import scala.util.control.NonFatal
   * Per flagged query: full memo clear, one untimed warm run (the
   * codegen/JIT absorption Bench's warmup provides), then
   * SPARK_GRAFT_REPEATS (default 5) timed repeats under Bench's
-  * producer-clear discipline. Verdicts: isolated_min <= 1.2x record →
-  * jitter; <= ratio → borderline (watch next round); above → REGRESSION
-  * (the slowdown reproduces in isolation — find the code change).
+  * producer-clear and failure rules. Verdicts: a repeat threw → FAILED;
+  * isolated_min <= 1.2x record → jitter; <= ratio → borderline (watch
+  * next round); above → REGRESSION (the slowdown reproduces in
+  * isolation — find the code change).
   */
 object Adjudicate {
 
@@ -44,14 +44,33 @@ object Adjudicate {
     }
   }
 
+  /** The verdict on one mover's isolated samples (None: a repeat threw). */
+  def verdict(samples: Option[Seq[Double]], record: Double, threshold: Double): String =
+    samples.fold("FAILED — the query throws in isolation; this is a code regression, not jitter") { s =>
+      val ratio = s.min / record
+      // the min landing on the LAST repeat with the first half well above
+      // it = the JVM was still warming (JIT/codegen) when sampling
+      // stopped; the isolated number is an UPPER bound on the steady
+      // state, not evidence of a regression
+      val stillWarming = s.size >= 3 && s.last == s.min &&
+        s.take(s.size / 2).min > 1.15 * s.min
+      if (ratio <= 1.2) "jitter (host-window inflation in the close run)"
+      else if (stillWarming)
+        "not converged — samples still descending at the last repeat; " +
+          "the isolated min is an upper bound (in-board records ride a " +
+          "deeply warmed JVM); re-run with more repeats before calling it"
+      else if (ratio <= threshold) "borderline — watch next round"
+      else "REGRESSION — reproduces in isolation; find the code change"
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Adjudicate <record.json> <close.json> [ratioThreshold]")
     val record = parse(args(0))
     val close = parse(args(1))
     val threshold = if (args.length >= 3) args(2).toDouble else 1.5
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "5").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val repeats = Measure.repeats(5)
+    val sfDir = Measure.sfDir
 
     val movers = close.toSeq.sortBy(_._1).flatMap { case (name, c) =>
       record.get(name).filter(r => c > threshold * r).map(r => (name, r, c))
@@ -65,6 +84,8 @@ object Adjudicate {
     val spark = graft.Sessions.local()
     require(graft.queries.ArtifactStore.dirOf(spark).isEmpty,
       "Adjudicate measures production computation; the artifact store must be unset")
+    val queries = SparkEntry.queries
+    def run(name: String): Unit = Measure.noop(queries(name)(spark, sfDir))
 
     // Bench-style global warmup (q50's clustering lineage generates the
     // bulk of the shared whole-stage-codegen classes). NOTE the residual
@@ -73,70 +94,25 @@ object Adjudicate {
     // floor approaches its record only asymptotically (measured: q121
     // monotone 3.24 -> 0.68 s over 12 repeats vs its 0.44 in-board
     // record) — the convergence annotation below flags that state.
-    SparkEntry.queries.get("q50_neardup_clusters").foreach { fn =>
-      try Measure.noop(fn(spark, sfDir))
-      catch { case NonFatal(e) =>
-        System.err.println(s"[adjudicate] warmup q50_neardup_clusters failed: $e")
-      }
-    }
+    val q50 = "q50_neardup_clusters"
+    if (queries.contains(q50)) Measure.attempt("adjudicate", s"warmup $q50")(run(q50))
 
     val rows = movers.map { case (name, rec, closeMin) =>
-      val fn = SparkEntry.queries(name)
       // session state from the PREVIOUS adjudicated query must not
       // subsidize this one: start from empty memos, like a fresh JVM
       graft.queries.Artifacts.clearAll()
-      try Measure.noop(fn(spark, sfDir))
-      catch { case NonFatal(e) =>
-        System.err.println(s"[adjudicate] warmup $name failed: $e")
-      }
-      // a FAILED repeat must not contribute its (near-zero) elapsed time
-      // as a sample — a query BROKEN by a code change would otherwise
-      // adjudicate as "jitter", writing exoneration into the evidence
-      // file for exactly the failure the tool exists to catch
-      val attempts = (1 to repeats).map { r =>
-        Bench.clearProducerMemo(name)
-        System.err.println(s"[adjudicate] $name ($r/$repeats)")
-        try Some(Measure.seconds(Measure.noop(fn(spark, sfDir))))
-        catch { case NonFatal(e) =>
-          System.err.println(s"[adjudicate] $name failed: ${e.getMessage}")
-          None
-        }
-      }
-      val samples = attempts.flatten
-      val failures = attempts.count(_.isEmpty)
-      if (samples.isEmpty) {
-        System.err.println(s"[adjudicate] $name FAILED on all $repeats repeats")
-        s""""$name":{"samples":[],"failures":$failures,""" +
-          s""""record_prior":${num(rec)},"close_min":${num(closeMin)},""" +
-          s""""verdict":"FAILED — the query throws in isolation; this is a code regression, not jitter"}"""
-      } else {
-        val isoMin = samples.min
-        val ratio = isoMin / rec
-        // the min landing on the LAST repeat with the first half well
-        // above it = the JVM was still warming (JIT/codegen) when
-        // sampling stopped; the isolated number is an UPPER bound on
-        // the steady state, not evidence of a regression
-        val stillWarming = samples.size >= 3 &&
-          samples.last == isoMin &&
-          samples.take(samples.size / 2).min > 1.15 * isoMin
-        val verdict =
-          if (failures > 0)
-            s"UNSTABLE — $failures of $repeats repeats threw; treat as a regression"
-          else if (ratio <= 1.2) "jitter (host-window inflation in the close run)"
-          else if (stillWarming)
-            "not converged — samples still descending at the last repeat; " +
-              "the isolated min is an upper bound (in-board records ride a " +
-              "deeply warmed JVM); re-run with more repeats before calling it"
-          else if (ratio <= threshold) "borderline — watch next round"
-          else "REGRESSION — reproduces in isolation; find the code change"
-        System.err.println(f"[adjudicate] $name isolated_min=$isoMin%.3f " +
-          f"record=$rec%.3f ratio=$ratio%.2f → $verdict")
-        s""""$name":{"samples":${samples.map(num(_)).mkString("[", ",", "]")},""" +
-          s""""failures":$failures,""" +
-          s""""isolated_min":${num(isoMin)},"record_prior":${num(rec)},""" +
-          s""""close_min":${num(closeMin)},"ratio_vs_record":${num(ratio)},""" +
-          s""""verdict":"$verdict"}"""
-      }
+      Measure.attempt("adjudicate", s"warmup $name")(run(name))
+      // Bench's failure rule: a repeat that throws fails the query and no
+      // sample counts — a query BROKEN by a code change must never
+      // adjudicate as "jitter" on its near-zero elapsed time
+      val samples = Measure.repeat("adjudicate", name, repeats)(
+        Bench.clearProducerMemo(name))(run(name))
+      val v = verdict(samples, rec, threshold)
+      System.err.println(s"[adjudicate] $name → $v")
+      val timed = samples.fold("")(s =>
+        s""""isolated_min":${num(s.min)},"ratio_vs_record":${num(s.min / rec)},""")
+      s""""$name":{"samples":${samples.getOrElse(Nil).map(num(_)).mkString("[", ",", "]")},""" +
+        s"""$timed"record_prior":${num(rec)},"close_min":${num(closeMin)},"verdict":"$v"}"""
     }
 
     val line = s"""{"protocol":"tools/Adjudicate: shared JVM, per query full""" +

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.{Measure, Sessions, SparkEntry}
 import graft.Measure.num
 import graft.queries.{Artifacts, ArtifactStore, ClusterMemo, Pipeline6, Tables}
-import scala.util.control.NonFatal
 
 /** The scale ladders: each op timed on ×n inflations of `documents` and
   * `events` (rung 1 is SPARK_GRAFT_SF_DIR itself, default sf0.1), all
@@ -52,14 +51,12 @@ import scala.util.control.NonFatal
   * letter differs across copies, so MinHash signatures, LSH bands,
   * gram keys and fingerprints are all copy-disjoint and the ×10 corpus
   * behaves like ten shards of fresh data — which is what 100 TB IS.
-  * (The first cut suffixed each TOKEN with a copy marker; that leaves
-  * most intra-word character shingles shared, cross-copy MinHash
-  * signatures collide, every LSH bucket holds all ten copies of its
-  * members, and pair generation explodes ~100× — an inflation-scheme
-  * artifact this run exists to avoid measuring.) Events keep their
-  * timestamp distribution (10× denser windows — real scale) with
-  * re-keyed event/user ids so bootstrap hash draws and per-user groups
-  * stay well-formed. All other tables are symlinked unchanged.
+  * (A copy marker suffixed to each token leaves most intra-word
+  * shingles shared across copies, and pair generation explodes ~100×.)
+  * Events keep their timestamp distribution (10× denser windows — real
+  * scale) with re-keyed event/user ids so bootstrap hash draws and
+  * per-user groups stay well-formed. All other tables are symlinked
+  * unchanged.
   */
 object Ladder {
 
@@ -151,16 +148,11 @@ object Ladder {
     * copy-disjoint for real words (the same argument as rotation).
     *
     * Enumeration order matters: copies 0–25 are the PURE ROTATIONS
-    * (a = 1, b = k), whose pairwise composed maps fix ZERO letters —
-    * full copy-disjointness down to single-character tokens. The
-    * multiplier-first order this replaced gave every copy k < 12 shift
-    * b = 0, and all pure-multiplier maps fix 'a' (i = 0) and 'n'
-    * (i = 13), so the common words "a"/"an" were verbatim-shared
-    * across ALL copies of a ×10 run — their unigram df multiplied ×10
-    * instead of staying copy-disjoint, skewing term-stat structures
-    * (RM3 expansion, BPE vocab counts) in the scale measurement.
-    * Rotation-first pays the ≤2-fixed-letter weakening only past copy
-    * 26, where the rotation family is exhausted anyway.
+    * (a = 1, b = k), whose pairwise composed maps fix ZERO letters. A
+    * multiplier-first order gives copies k < 12 shift b = 0, and every
+    * pure-multiplier map fixes 'a' and 'n', so "a"/"an" would be shared
+    * verbatim by all copies of a ×10 run, skewing term statistics (RM3
+    * expansion, BPE vocab counts).
     */
   def permutation(k: Int): (String, String) = {
     require(k >= 0 && k < 312, s"affine family supports 312 copies, got $k")
@@ -190,19 +182,11 @@ object Ladder {
     * (no remap preserves their character classes) — exact duplicates a
     * production pipeline removes before LSH.
     *
-    * Measured honesty note: this is HARDENING, not the explanation of
-    * the fat LSH buckets in the scale runs. The >1000-member buckets
-    * ProbePairGrowth (commit c8aa06f) found at ×10 (max 2049) were
-    * unchanged by the
-    * digit fix — member inspection showed each sits WITHIN one copy:
-    * every permuted copy is an independent MinHash draw over the
-    * testdata's ~40-word synthetic vocabulary, and a draw whose
-    * globally-minimal shingles are common puts a large fraction of
-    * that copy's docs in one bucket (the base corpus's own draw was a
-    * lucky-small one, max bucket 138). Bucket size is bounded by the
-    * PER-COPY doc count, so band-pair volume still grows linearly with
-    * copies — intrinsic low-text-entropy LSH behavior, not an
-    * inflation artifact.
+    * This is hardening, not the cause of the ×10 runs' >1000-member LSH
+    * buckets (ProbePairGrowth, commit c8aa06f): each sits WITHIN one
+    * copy, an independent MinHash draw over the testdata's ~40-word
+    * vocabulary, so bucket size is bounded by the per-copy doc count and
+    * band-pair volume still grows linearly with copies.
     */
   def digitPermutation(k: Int): (String, String) = {
     val units = Array(1, 3, 7, 9)
@@ -217,15 +201,10 @@ object Ladder {
   def inflate(spark: SparkSession, src: String, dst: String,
               nCopies: Int): Unit = {
     val dstDir = Paths.get(dst)
-    // the marker must encode WHICH corpus (path + content signature) was
-    // inflated: a bare "ok" would silently reuse the previous corpus's
-    // inflation after SPARK_GRAFT_SF_DIR changes, and every exponent
-    // would compare a t1 on the new corpus against a t10 of the old one
+    // the marker encodes WHICH corpus (path + content signature) was
+    // inflated, and under which permutation scheme ("affine-rot1st"), so
+    // a changed SPARK_GRAFT_SF_DIR or scheme never reuses a stale copy
     val marker = dstDir.resolve("_SCALE10_OK")
-    // "affine-rot1st" versions the PERMUTATION SCHEME into the stamp:
-    // the enumeration-order fix changed what each copy k contains, and
-    // an unversioned stamp would silently serve a corpus inflated
-    // under the old ordering
     val stamp =
       s"$src|x$nCopies|affine-rot1st-digrot|" +
         s"${graft.queries.ArtifactStore.corpusSig(src)}\n"
@@ -278,35 +257,31 @@ object Ladder {
     ()
   }
 
-  /** Drops every memo and the localCheckpoint blocks behind it. Clearing
-    * the memo maps drops REFERENCES, but the blocks stay in the block
-    * manager until the ContextCleaner's weak refs process — at the ×100
-    * rung the accumulated ×10/×30 blocks pinned old-gen at 96%+ and the
-    * rung measured a GC WALL (236 full GCs / 655 of 900 s), not the plan.
-    * Nothing references these RDDs after the clear, so they go eagerly
-    * and BLOCKING: a repeat never starts while the previous one's
-    * gigabytes are still draining from the storage pool.
+  /** Drops every memo and the localCheckpoint blocks behind it, eagerly
+    * and blocking: cleared memo maps leave their blocks to the
+    * ContextCleaner, and at the ×100 rung the accumulated ×10/×30 blocks
+    * pinned old gen at 96%+ (236 full GCs in 900 s), so a repeat never
+    * starts while the previous one's gigabytes are still draining.
     */
   private def clearMemos(spark: SparkSession): Unit = {
     Artifacts.clearAll()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
-  /** (min seconds over `repeats`, untimed state-build seconds). */
+  /** (min of `repeats` timed runs, state-build seconds); None if the op threw. */
   def measure(spark: SparkSession, op: Op, dir: String,
-              repeats: Int): (Double, Option[Double]) = {
-    val state = op.memo match {
+              repeats: Int): Option[(Double, Option[Double])] = {
+    def timed(before: => Unit) = Measure.repeat("ladder", s"${op.name} @$dir", repeats)(
+      before)(Measure.noop(op.run(spark, dir))).map(_.min)
+    op.memo match {
+      case ClearEachRepeat => timed(clearMemos(spark)).map(_ -> None)
       case WarmPerRung(build) =>
-        clearMemos(spark)
-        Some(Measure.seconds(build(spark, dir)))
-      case ClearEachRepeat => None
+        for {
+          state <- Measure.repeat("ladder", s"${op.name} state @$dir", 1)(
+            clearMemos(spark))(build(spark, dir))
+          t <- timed(())
+        } yield (t, state.headOption)
     }
-    val t = (1 to repeats).map { r =>
-      if (op.memo == ClearEachRepeat) clearMemos(spark)
-      System.err.println(s"[ladder] ${op.name} @$dir ($r/$repeats)")
-      Measure.seconds(Measure.noop(op.run(spark, dir)))
-    }.min
-    (t, state)
   }
 
   private def perRung(vs: Seq[(Int, Double)]): String =
@@ -348,23 +323,21 @@ object Ladder {
       sys.exit(2)
     }
     val spec = Specs(ladder)
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val src = Measure.sfDir
     val rungs = sys.env.get("SPARK_GRAFT_LADDER_RUNGS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(spec.rungs)
     val ops = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(boardOp))
       .getOrElse(spec.ops)
-    val repeats = sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt).getOrElse(spec.repeats)
+    val repeats = Measure.repeats(spec.repeats)
     require(rungs.head == 1 && rungs.size >= 2,
       s"ladder needs rung 1 plus at least one inflated rung, got $rungs")
     // one JVM plays driver and every executor here, and the ×100 rung's
-    // serialized artifact pin (GBs of evictable bytes) will fill the
-    // unified pool's whole allowance (0.6 of heap) — measured: old gen
-    // pinned at 99.9% live and full-GC walls, because plain JVM
-    // allocation (task deserialization, codegen buffers) does not go
-    // through the memory manager and finds no headroom. 0.45 leaves about
-    // half the heap unmanaged. A single-box harness setting, not engine
-    // guidance (Bench keeps Spark's default).
+    // serialized artifact pins fill the unified pool's whole allowance
+    // (0.6 of heap): old gen pinned at 99.9% live and full-GC walls,
+    // because plain JVM allocation does not go through the memory
+    // manager. 0.45 leaves about half the heap unmanaged. A single-box
+    // harness setting, not engine guidance (Bench keeps Spark's default).
     val spark = Sessions.local(conf = Map("spark.memory.fraction" -> "0.45"))
     // the clears only empty the in-JVM memo maps; a configured store
     // would re-serve persisted artifacts instead of computing them
@@ -372,24 +345,21 @@ object Ladder {
       "Ladder measures production computation; the artifact store must be unset")
 
     val dirs: Map[Int, String] = rungs.map { n =>
-      val d = if (n == 1) src else {
+      n -> (if (n == 1) src else {
         val dst = s"target/scale$n/data"
         System.err.println(s"[ladder] inflating ×$n → $dst")
         inflate(spark, src, dst, n)
         dst
-      }
-      n -> d
+      })
     }.toMap
 
-    // codegen/JIT warmup on the small side only (untimed throwaway)
-    ops.foreach { op =>
-      try measure(spark, op, src, 1)
-      catch { case NonFatal(e) => System.err.println(s"[ladder] warmup ${op.name} failed: $e") }
-    }
+    // codegen/JIT warmup on the small side only (a throwaway run)
+    ops.foreach(measure(spark, _, src, 1))
 
     val rows = ops.map { op =>
       val times = rungs.map { n =>
-        val (t, state) = measure(spark, op, dirs(n), repeats)
+        val (t, state) = measure(spark, op, dirs(n), repeats).getOrElse(
+          sys.error(s"${op.name} failed at x$n; a ladder needs every rung"))
         System.err.println(s"[ladder] ${op.name} x$n ${num(t)} s" +
           state.fold("")(s => s", state build ${num(s)} s"))
         (n, t, state)

@@ -5,9 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import scala.util.control.NonFatal
 
-import graft.{Bench, Sessions, SparkEntry}
+import graft.{Bench, Measure, Sessions, SparkEntry}
 
 /** Plan probe for SparkEntry queries, in Bench's session and with Bench's
   * producer-clear discipline (queries in sorted order, each clearing the
@@ -31,8 +30,7 @@ object Probe {
   val Modes: Seq[String] = Seq("plan", "executed", "scans")
 
   /** Every query name starting with one of `prefixes`, sorted. */
-  def select(prefixes: Seq[String]): Seq[String] =
-    SparkEntry.queries.keys.toSeq.sorted.filter(n => prefixes.exists(n.startsWith))
+  def select(prefixes: Seq[String]): Seq[String] = Measure.select(Some(prefixes))
 
   /** The probe's report on one query. */
   def report(spark: SparkSession, mode: String, name: String, sfDir: String): String = {
@@ -72,7 +70,7 @@ object Probe {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = Sessions.local()
     val failed = select(prefixes).filterNot { name =>
-      try {
+      Measure.attempt("probe", name) {
         val text = report(spark, mode, name, sfDir)
         if (out.isEmpty) println(s"===== $name $mode =====\n$text")
         else {
@@ -80,10 +78,6 @@ object Probe {
           Files.writeString(dir.resolve(s"${name}_${out(1)}.txt"), text)
           System.err.println(s"[probe] wrote $name (${out(1)})")
         }
-        true
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[probe] $name failed: $e")
-        false
       }
     }
     spark.stop()

@@ -50,4 +50,12 @@ class AdjudicateSpec extends AnyFunSuite {
     try assert(Adjudicate.parse(f.toString) == Map("q167_shard_gini" -> 0.5))
     finally Files.deleteIfExists(f)
   }
+
+  test("a repeat that throws makes the query FAILED, never jitter") {
+    assert(Adjudicate.verdict(None, 1.0, 1.5).startsWith("FAILED"))
+    assert(Adjudicate.verdict(Some(Seq(1.0, 0.9, 1.1)), 1.0, 1.5).startsWith("jitter"))
+    assert(Adjudicate.verdict(Some(Seq(1.4, 1.3, 1.35)), 1.0, 1.5).startsWith("borderline"))
+    assert(Adjudicate.verdict(Some(Seq(3.0, 2.9, 1.6)), 1.0, 1.5).startsWith("not converged"))
+    assert(Adjudicate.verdict(Some(Seq(2.0, 2.1, 2.2)), 1.0, 1.5).startsWith("REGRESSION"))
+  }
 }

@@ -35,8 +35,7 @@ class ArtifactsSpec extends SparkSuite {
   }
 
   test("session-wide artifacts have no producer") {
-    for (a <- Seq(Words, TrigramCounts, TrigramModel, TrigramModelCollected,
-        BpeVocab))
+    for (a <- Seq(Words, TrigramCounts, TrigramModelCollected, BpeVocab))
       assert(a.producers.isEmpty, a.name)
   }
 
@@ -61,7 +60,7 @@ class ArtifactsSpec extends SparkSuite {
       "leak_grams" -> Eager, "contam_stats" -> Lazy, "emb_pairs" -> Lazy,
       "kmeans_cents" -> StoreOnly, "doc_features" -> Lazy,
       "bm25_scores" -> Lazy, "trigram_counts" -> Lazy,
-      "trigram_model" -> Value, "trigram_model_collected" -> Value,
+      "trigram_model_collected" -> Value,
       "bpe_vocab" -> Lazy))
   }
 

@@ -1,9 +1,12 @@
 package graft
 
+import java.security.MessageDigest
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupOps
-import graft.tools.SimhashRecall
+import graft.SimhashRecallSpec.{Grades, cell, fixture}
 
 /** The adaptive-width recall trade, pinned structurally (judge directive
   * r10-#4): `adaptiveSimhashWidth` widens the signature with the corpus,
@@ -11,18 +14,19 @@ import graft.tools.SimhashRecall
   * SUBSET of the narrow one (widening refines — the low bits of a wide
   * signature ARE the narrow signature), (b) raising maxDist with the
   * width buys the recall back. Both are asserted here on the
-  * deterministic planted fixture of `tools/SimhashRecall` (md5-token
-  * corpus, zero RNG — every number is bit-reproducible), and the
-  * headline quantitative shape is pinned loosely enough to survive a
-  * fixture-size change but tightly enough that the trade cannot
-  * silently invert. The full measured curve is the committed
-  * `SIMHASH_RECALL.json` artifact.
+  * deterministic planted fixture below (md5-token corpus, zero RNG —
+  * every number is bit-reproducible), and the headline quantitative
+  * shape is pinned loosely enough to survive a fixture-size change but
+  * tightly enough that the trade cannot silently invert. The full
+  * measured curve (500 bases) is the committed `SIMHASH_RECALL.json`
+  * artifact; the tool that wrote it is at commit `4146367`
+  * (`graft.tools.SimhashRecall`).
   */
 class SimhashRecallSpec extends SparkSuite {
   private val NBase = 150
 
   private lazy val (docs, planted) = {
-    val (d, p) = SimhashRecall.fixture(spark, NBase)
+    val (d, p) = fixture(spark, NBase)
     (d.localCheckpoint(), p.localCheckpoint())
   }
 
@@ -35,7 +39,7 @@ class SimhashRecallSpec extends SparkSuite {
   }
 
   private def recallByGrade(width: Int, maxDist: Int): Map[Int, Double] =
-    SimhashRecall.cell(spark, docs, planted, width, maxDist)
+    cell(spark, docs, planted, width, maxDist)
       .map { case (k, t, f) => k -> f.toDouble / t }.toMap
 
   test("fixed-radius widening only DROPS planted pairs (subset), and the drop is real") {
@@ -51,7 +55,7 @@ class SimhashRecallSpec extends SparkSuite {
     for (w <- Seq(16, 31)) {
       val r2 = recallByGrade(w, 2)
       val r3 = recallByGrade(w, 3)
-      for (k <- SimhashRecall.Grades)
+      for (k <- Grades)
         assert(r3(k) >= r2(k), s"width $w grade $k: maxDist 3 recall ${r3(k)} < maxDist 2 ${r2(k)}")
     }
   }
@@ -63,7 +67,7 @@ class SimhashRecallSpec extends SparkSuite {
     }
     // monotone in width at fixed radius (the subset property, per grade)
     val byWidth = Seq(16, 21, 26, 31).map(w => w -> recallByGrade(w, 2)).toMap
-    for (Seq(w1, w2) <- Seq(16, 21, 26, 31).sliding(2); k <- SimhashRecall.Grades)
+    for (Seq(w1, w2) <- Seq(16, 21, 26, 31).sliding(2); k <- Grades)
       assert(byWidth(w1)(k) >= byWidth(w2)(k),
         s"grade $k: recall rose with width $w1 -> $w2 at radius 2")
   }
@@ -84,7 +88,7 @@ class SimhashRecallSpec extends SparkSuite {
     assert(graft.dedup.DedupOps.adaptiveSimhashDist(31) == 3)
     val base = recallByGrade(16, 2)
     val rule = recallByGrade(21, 3) // the width picked for a sf0.1-scale corpus
-    for (k <- SimhashRecall.Grades)
+    for (k <- Grades)
       assert(rule(k) >= base(k),
         s"grade $k: w21/d3 recall ${rule(k)} fell below the w16/d2 baseline ${base(k)}")
     assert(rule(1) >= 0.9, s"grade-1 recall under the rule was ${rule(1)}")
@@ -94,5 +98,76 @@ class SimhashRecallSpec extends SparkSuite {
     val wide3 = recallByGrade(31, 3)
     assert(wide2(1) < 0.75, s"w31/d2 grade-1 recall ${wide2(1)} — fixture stopped showing the trade?")
     assert(wide3(1) > 0.8, s"w31/d3 grade-1 recall ${wide3(1)}")
+  }
+}
+
+/** The planted near-dup fixture. No RNG anywhere — every word is an
+  * md5-derived token, so the corpus and therefore every recall value is
+  * bit-reproducible: `nBase` base documents of [[WordsPerDoc]] distinct
+  * synthetic words; for each base, one variant per grade k ∈ [[Grades]]
+  * replacing k of the words with fresh ones (SimHash here is order-free
+  * over distinct words — [[graft.dedup.SimHashSig]] — so "replace k
+  * words" IS the edit geometry the signature sees). The planted (base,
+  * variant) pair at grade k is a true near-dup of graded strength;
+  * recall per cell = planted pairs recovered by
+  * [[DedupOps.simhashHammingPairs]] at that (width, maxDist). Background
+  * collisions (base-vs-base bucket hits) affect precision only and are
+  * not counted.
+  */
+object SimhashRecallSpec {
+
+  val Grades: Seq[Int] = Seq(1, 2, 4, 8)
+  val WordsPerDoc = 40
+
+  private def md5hex(s: String): String = {
+    val d = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+    d.map(b => f"$b%02x").mkString
+  }
+
+  private def baseWord(i: Int, slot: Int): String =
+    "w" + md5hex(s"simrec_base_${i}_$slot").substring(0, 10)
+
+  private def freshWord(i: Int, grade: Int, slot: Int): String =
+    "r" + md5hex(s"simrec_var_${i}_${grade}_$slot").substring(0, 10)
+
+  /** (documents(id, text), planted(id_a, id_b, grade)); id_a < id_b by
+    * construction (base i is id 100·i, its grade-index-g variant is
+    * 100·i + g + 1), matching simhashHammingPairs' emission order.
+    */
+  def fixture(spark: SparkSession, nBase: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val docs = (0 until nBase).flatMap { i =>
+      val base = (0 until WordsPerDoc).map(s => baseWord(i, s))
+      val baseRow = (100L * i, base.mkString(" "))
+      val variants = Grades.zipWithIndex.map { case (k, g) =>
+        val words = base.zipWithIndex.map { case (w, s) =>
+          if (s < k) freshWord(i, k, s) else w
+        }
+        (100L * i + g + 1, words.mkString(" "))
+      }
+      baseRow +: variants
+    }.toDF("id", "text")
+    val planted = (0 until nBase).flatMap { i =>
+      Grades.zipWithIndex.map { case (k, g) => (100L * i, 100L * i + g + 1, k) }
+    }.toDF("id_a", "id_b", "grade")
+    (docs, planted)
+  }
+
+  /** Planted pairs recovered at one (width, maxDist) cell, joined back
+    * to their grade: rows (grade, n_true, n_found).
+    */
+  def cell(spark: SparkSession, docs: DataFrame, planted: DataFrame,
+           width: Int, maxDist: Int): Seq[(Int, Long, Long)] = {
+    val sig = DedupOps.withSimhash(docs, "text", "sh", width)
+    val found = DedupOps
+      .simhashHammingPairs(sig, "id", "sh", maxDist = maxDist, width = width)
+      .select(col("id_a"), col("id_b"), lit(1L).as("_hit"))
+    planted.join(found, Seq("id_a", "id_b"), "left")
+      .groupBy("grade")
+      .agg(count(lit(1)).as("n_true"), count(col("_hit")).as("n_found"))
+      .collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+      .toSeq
   }
 }
